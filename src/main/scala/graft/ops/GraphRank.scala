@@ -758,26 +758,6 @@ object GraphRank {
           .otherwise(lit(0L)).as("cc_ppm"))
   }
 
-  /** X126 core: pairs of `valCol` nodes sharing a `keyCol` neighbor,
-    * with the shared-neighbor count — the common-neighbor similarity
-    * both citation-graph classics reduce to (co-citation pairs DSTs
-    * per SRC, bibliographic coupling pairs SRCs per DST; see the
-    * wrappers).
-    *
-    * Work bound: the wedge self-join is Σ deg(key)² — quadratic in hub
-    * keys, so keys above `maxKeyDegree` are EXCLUDED before pairing
-    * (the q24 stop-shingle discipline: a reference cited by everyone
-    * carries no pair signal and all of the cost; the cap is part of
-    * the operator contract and every oracle mirrors it). `minCommon`
-    * gates output AFTER counting — it cannot prune the join, only the
-    * result.
-    *
-    * Dataflow: distinct edge set materialized once, degree gate as a
-    * left-semi join, ONE equi-join on the key, one map-side-combinable
-    * pair count. No windows, no driver state.
-    *
-    * @return (id_a, id_b, n_common) with id_a < id_b
-    */
   /** In-core i<j pair expansion of a sorted value-set column: each
     * row's pairs are enumerated inside codegen (higher-order
     * functions), so pair rows exist only as the downstream
@@ -789,13 +769,19 @@ object GraphRank {
     * the joined pairs. Per-row work/memory is C(|set|, 2) — callers
     * own the bound (basket sizes are small constants; degree-capped
     * callers filter on set size before expanding). */
-  def pairsFromSets(grouped: DataFrame, vsCol: String): DataFrame =
+  def pairsFromSets(grouped: DataFrame, vsCol: String): DataFrame = {
+    // withColumn would silently replace these (case-insensitively)
+    val clash = grouped.columns.filter(c => Seq("a", "b", "__p").exists(_.equalsIgnoreCase(c)))
+    require(clash.isEmpty,
+      s"pairsFromSets: input already has column(s) ${clash.mkString(", ")}")
+    val vs = "`" + vsCol.replace("`", "``") + "`"
     grouped.withColumn("__p", explode(expr(
-        s"flatten(transform($vsCol, (x, i) -> " +
-        s"transform(slice($vsCol, i + 2, size($vsCol)), " +
+        s"flatten(transform($vs, (x, i) -> " +
+        s"transform(slice($vs, i + 2, size($vs)), " +
         "y -> named_struct('a', x, 'b', y))))")))
       .withColumn("a", col("__p.a")).withColumn("b", col("__p.b"))
       .drop(vsCol, "__p")
+  }
 
   /** Distinct (a < b) value pairs sharing a key, one row per
     * (key, pair) incidence — the shared-neighbor pair generator
@@ -812,6 +798,26 @@ object GraphRank {
         .agg(array_sort(collect_set(col(valCol))).as("__vs")),
       "__vs")
 
+  /** X126 core: pairs of `valCol` nodes sharing a `keyCol` neighbor,
+    * with the shared-neighbor count — the common-neighbor similarity
+    * both citation-graph classics reduce to (co-citation pairs DSTs
+    * per SRC, bibliographic coupling pairs SRCs per DST; see the
+    * wrappers).
+    *
+    * Work bound: the wedge expansion is Σ deg(key)² — quadratic in hub
+    * keys, so keys above `maxKeyDegree` are EXCLUDED before pairing
+    * (the q24 stop-shingle discipline: a reference cited by everyone
+    * carries no pair signal and all of the cost; the cap is part of
+    * the operator contract and every oracle mirrors it). `minCommon`
+    * gates output AFTER counting — it cannot prune the join, only the
+    * result.
+    *
+    * Dataflow: one map-side-combinable value-set aggregation per key,
+    * the degree gate as a set-size filter, in-core pair expansion
+    * ([[pairsFromSets]]), one pair count. No windows, no driver state.
+    *
+    * @return (id_a, id_b, n_common) with id_a < id_b
+    */
   def commonNeighborPairs(edges: DataFrame, keyCol: String, valCol: String,
                           maxKeyDegree: Long, minCommon: Long): DataFrame = {
     require(maxKeyDegree >= 1, s"non-positive degree cap: $maxKeyDegree")

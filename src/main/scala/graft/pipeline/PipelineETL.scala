@@ -29,12 +29,12 @@ final case class RunReport(
   *   CSD/CCD/CSE*.csv          composition cost sheets (two-row header)
   *   Analitico*.csv            composition structure sheet
   *
-  * Load order follows the reference exactly (`etl_pipeline.py:340-380`):
-  * maintenance first (append-ignore + status sync), then dims (upsert),
-  * edges (truncate-reload), facts (append-ignore), then placeholder
-  * repair of referential integrity (J1-J3). Per-sheet failures are
-  * isolated (O2, processor.py:496-500): logged into the report, the rest
-  * of the run proceeds.
+  * Load order reaches the reference's end state (`etl_pipeline.py:340-380`):
+  * maintenance log (append-ignore), edges (truncate-reload), facts
+  * (append-ignore), then each catalog published once in its month-end
+  * state (upsert, placeholder repair J1-J3, status sync W1/J4). Per-sheet
+  * failures are isolated (O2, processor.py:496-500): logged into the
+  * report, the rest of the run proceeds. A failed catalog publish fails it.
   */
 class PipelineETL(spark: SparkSession, store: graft.store.TableStore, cfg: EngineConfig) {
 
@@ -137,7 +137,6 @@ class PipelineETL(spark: SparkSession, store: graft.store.TableStore, cfg: Engin
           val events = Processors.processManutencoes(staged, cfg)
           val n = store.appendIgnore("manutencoes_historico", events)
           inserted("manutencoes_historico") = inserted.getOrElse("manutencoes_historico", 0L) + n
-          syncStatuses()
         }
       }
     }
@@ -183,78 +182,43 @@ class PipelineETL(spark: SparkSession, store: graft.store.TableStore, cfg: Engin
     }
 
     phase("load") {
-    // A4: consolidate per-sheet catalog fragments, first-sheet-wins
-    // (priority = position in the fragment sequence, made explicit).
-    if (catalogFragments.nonEmpty) {
-      val consolidated = graft.ops.Relational.dedupKeepFirst(
-        catalogFragments.zipWithIndex
-          .map { case (df, i) => df.withColumn("__prio", lit(i)) }
-          .reduce(_ unionByName _),
-        Seq("codigo"), Seq(col("__prio").asc)).drop("__prio")
-        .withColumn("classificacao", lit(null).cast("string"))
-        .withColumn("status", lit(Schemas.Status.Ativo))
-      inserted("insumos") = store.upsert("insumos", consolidated)
-    }
-
-    analitico.foreach { case (parents, _, insumoEdges, subcompEdges) =>
-      val compCatalog = parents
-        .withColumn("grupo", lit(null).cast("string"))
-        .withColumn("status", lit(Schemas.Status.Ativo))
-      inserted("composicoes") = store.upsert("composicoes", compCatalog)
       // S12: edges are truncate-reloaded each month (etl_pipeline.py:359-360).
-      store.overwrite("composicao_insumos", insumoEdges)
-      inserted("composicao_insumos") = insumoEdges.count()
-      store.overwrite("composicao_subcomposicoes", subcompEdges)
-      inserted("composicao_subcomposicoes") = subcompEdges.count()
-    }
-
-    if (priceFragments.nonEmpty)
-      inserted("precos_insumos_mensal") =
-        store.appendIgnore("precos_insumos_mensal", priceFragments.reduce(_ unionByName _))
-    if (custoFragments.nonEmpty)
-      inserted("custos_composicoes_mensal") =
-        store.appendIgnore("custos_composicoes_mensal", custoFragments.reduce(_ unionByName _))
+      analitico.foreach { case (_, _, insumoEdges, subcompEdges) =>
+        Seq("composicao_insumos" -> insumoEdges, "composicao_subcomposicoes" -> subcompEdges)
+          .foreach { case (t, edges) => store.overwrite(t, edges); inserted(t) = store.read(t).count() }
+      }
+      if (priceFragments.nonEmpty)
+        inserted("precos_insumos_mensal") =
+          store.appendIgnore("precos_insumos_mensal", priceFragments.reduce(_ unionByName _))
+      if (custoFragments.nonEmpty)
+        inserted("custos_composicoes_mensal") =
+          store.appendIgnore("custos_composicoes_mensal", custoFragments.reduce(_ unionByName _))
     }
 
     phase("repair_and_sync") {
-    // Placeholder repair (etl_pipeline.py:287-338): children referenced by
-    // the loaded edges but absent from the catalogs get template rows, so
-    // FK integrity holds by construction (J6 as an invariant, not a hope).
-    analitico.foreach { case (parents, childDetails, insumoEdges, subcompEdges) =>
-      val missingIns = Lifecycle.missingCodes(
-        store.read("composicao_insumos"), "insumo_filho_codigo", store.read("insumos"))
-      val insRows = Lifecycle.placeholderRows(missingIns,
-          childDetails.filter(col("tipo") === Schemas.ItemType.Insumo)
-            .select("codigo", "descricao", "unidade"),
-          cfg("PLACEHOLDER_INSUMO_DESC"), cfg("PLACEHOLDER_UNIT"))
-        .withColumn("classificacao", lit(null).cast("string"))
-        .withColumn("status", lit(Schemas.Status.Ativo))
-      val nIns = store.appendIgnore("insumos", insRows)
-
-      val allCompRefs = store.read("composicao_subcomposicoes")
-        .select(col("composicao_filho_codigo").as("c"))
-        .unionByName(store.read("composicao_insumos")
-          .select(col("composicao_pai_codigo").as("c")))
-        .unionByName(store.read("composicao_subcomposicoes")
-          .select(col("composicao_pai_codigo").as("c")))
-      val missingComp = Lifecycle.missingCodes(allCompRefs, "c", store.read("composicoes"))
-      val compRows = Lifecycle.placeholderRows(missingComp,
-          childDetails.filter(col("tipo") === Schemas.ItemType.Composicao)
-            .select("codigo", "descricao", "unidade"),
-          cfg("PLACEHOLDER_COMPOSICAO_DESC"), cfg("PLACEHOLDER_UNIT"))
-        .withColumn("grupo", lit(null).cast("string"))
-        .withColumn("status", lit(Schemas.Status.Ativo))
-      val nComp = store.appendIgnore("composicoes", compRows)
-      if (nIns > 0) inserted("insumos") = inserted.getOrElse("insumos", 0L) + nIns
-      if (nComp > 0) inserted("composicoes") = inserted.getOrElse("composicoes", 0L) + nComp
-    }
-
-    // Re-derive statuses after the dim loads: the upsert rewrites whole
-    // rows (status included), while in the reference PG's column-list
-    // INSERT leaves absent columns untouched. Status is a pure function
-    // of the immutable maintenance log, so recomputing it restores the
-    // same end state idempotently.
-    if (analitico.nonEmpty || catalogFragments.nonEmpty) syncStatuses()
+      val maintenanceLoaded = inserted.contains("manutencoes_historico")
+      if (maintenanceLoaded || catalogFragments.nonEmpty || analitico.nonEmpty) {
+        val log = store.read("manutencoes_historico")
+        val details = analitico.map(_._2)
+        // A4: consolidate per-sheet catalog fragments, first-sheet-wins
+        // (priority = position in the fragment sequence, made explicit).
+        val insumoRows = Option.when(catalogFragments.nonEmpty)(
+          graft.ops.Relational.dedupKeepFirst(
+            catalogFragments.zipWithIndex
+              .map { case (df, i) => df.withColumn("__prio", lit(i)) }
+              .reduce(_ unionByName _),
+            Seq("codigo"), Seq(col("__prio").asc)).drop("__prio"))
+        publishCatalog("insumos", Schemas.ItemType.Insumo, insumoRows, details,
+            Seq("composicao_insumos" -> "insumo_filho_codigo"),
+            cfg("PLACEHOLDER_INSUMO_DESC"), log)
+          .foreach(inserted("insumos") = _)
+        publishCatalog("composicoes", Schemas.ItemType.Composicao, analitico.map(_._1), details,
+            Seq("composicao_subcomposicoes" -> "composicao_filho_codigo",
+              "composicao_insumos" -> "composicao_pai_codigo",
+              "composicao_subcomposicoes" -> "composicao_pai_codigo"),
+            cfg("PLACEHOLDER_COMPOSICAO_DESC"), log)
+          .foreach(inserted("composicoes") = _)
+      }
     }
 
     val anyData = inserted.values.sum > 0
@@ -268,13 +232,47 @@ class PipelineETL(spark: SparkSession, store: graft.store.TableStore, cfg: Engin
       inserted.keys.toSeq, inserted.toMap, errors.toMap, phaseSeconds.toMap)
   }
 
-  /** W1/J4 applied to both catalogs after a maintenance load. */
-  private def syncStatuses(): Unit = {
-    val manut = store.read("manutencoes_historico")
-    val kw = cfg("DEACTIVATION_KEYWORD")
-    store.overwrite("insumos",
-      Lifecycle.syncStatus(store.read("insumos"), manut, Schemas.ItemType.Insumo, kw))
-    store.overwrite("composicoes",
-      Lifecycle.syncStatus(store.read("composicoes"), manut, Schemas.ItemType.Composicao, kw))
+  /** Publishes one catalog's month-end state with ONE overwrite: this
+    * month's `fresh` rows (status ATIVO) upserted over the existing
+    * catalog, plus placeholders (J3, `etl_pipeline.py:287-338`) for the
+    * codes the published `refs` edge columns hold but the merged catalog
+    * lacks, then every status synced from the maintenance log (W1/J4).
+    * The upsert rewrites whole rows (status included), while in the
+    * reference PG's column-list INSERT leaves absent columns untouched.
+    * Status is a pure function of the immutable maintenance log, so
+    * deriving it once here restores the same end state idempotently.
+    * Returns new codes plus placeholders, None if neither arrived. */
+  private def publishCatalog(table: String, tipo: String, fresh: Option[DataFrame],
+                             details: Option[DataFrame], refs: Seq[(String, String)],
+                             placeholderDesc: String, log: DataFrame): Option[Long] = {
+    val pk = Schemas.primaryKeys(table)
+    // rows entering this month: the table's columns, status ATIVO, absent
+    // columns null, null keys dropped (as upsert/append-ignore do), and
+    // flagged `__new` — the upsert keeps one incoming row per code
+    def entering(df: DataFrame): DataFrame =
+      df.select(Schemas.all(table).fields.toIndexedSeq.map { f =>
+        if (f.name == "status") lit(Schemas.Status.Ativo).as(f.name)
+        else if (df.columns.contains(f.name)) col(f.name)
+        else lit(null).cast(f.dataType).as(f.name)
+      } :+ lit(true).as("__new"): _*).na.drop(pk)
+    val existing = store.read(table).withColumn("__new", lit(false))
+    val incoming = fresh.map(entering)
+    val merged = incoming.fold(existing)(graft.ops.Relational.upsert(existing, _, pk))
+    val placeholders = details.map { d =>
+      val referenced = refs.map { case (t, c) => store.read(t).select(col(c).as("codigo")) }
+        .reduce(_ unionByName _)
+      entering(Lifecycle.placeholderRows(
+        Lifecycle.missingCodes(referenced, "codigo", merged),
+        d.filter(col("tipo") === tipo).select("codigo", "descricao", "unidade"),
+        placeholderDesc, cfg("PLACEHOLDER_UNIT")))
+    }
+    // cached: the count and the write share one evaluation
+    val state = Lifecycle.syncStatus(placeholders.fold(merged)(merged.unionByName),
+      log, tipo, cfg("DEACTIVATION_KEYWORD")).cache()
+    try {
+      val added = state.filter(col("__new")).count()
+      store.overwrite(table, state.drop("__new"))
+      Option.when(fresh.nonEmpty || added > 0)(added)
+    } finally state.unpersist()
   }
 }

@@ -380,6 +380,22 @@ class GraphRankSpec extends SparkSpec {
     assert(re.sorted == got.sorted)
   }
 
+  test("pairsFromSets: clashing input columns are rejected; set column names are quoted") {
+    import org.apache.spark.sql.functions.lit
+    val sets = Seq((1, Seq(1, 2, 3)), (2, Seq(4, 5)), (3, Seq(6))).toDF("__k", "__vs")
+    for (c <- Seq("a", "B", "__p")) {
+      val e = intercept[IllegalArgumentException](
+        GraphRank.pairsFromSets(sets.withColumn(c, lit(0)), "__vs"))
+      assert(e.getMessage.contains(c), e.getMessage)
+    }
+    def pairs(df: org.apache.spark.sql.DataFrame, vsCol: String) =
+      GraphRank.pairsFromSets(df, vsCol).as[(Int, Int, Int)].collect().toSet
+    val expected = pairs(sets, "__vs")
+    assert(expected == Set((1, 1, 2), (1, 1, 3), (1, 2, 3), (2, 4, 5)))
+    val odd = "item set-1 `x`"
+    assert(pairs(sets.withColumnRenamed("__vs", odd), odd) == expected)
+  }
+
   test("coCitation/bibCoupling match the brute-force model; hub cap excludes keys") {
     val rnd = new scala.util.Random(47)
     val raw = (1 to 300).map(_ => (rnd.nextInt(20).toLong, 100L + rnd.nextInt(30)))

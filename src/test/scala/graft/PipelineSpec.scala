@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.config.EngineConfig
@@ -63,6 +64,20 @@ class PipelineSpec extends SparkSpec {
       "13/2025;INSUMO;3;DATA INVÁLIDA;ALTERAÇÃO",
       "02/2025;INSUMO;abc;CÓDIGO INVÁLIDO;ALTERAÇÃO")
     dir.toString
+  }
+
+  /** Counts the write calls (overwrite, upsert, append-ignore) per table. */
+  private class CountingStore(root: String) extends TableStore(spark, root) {
+    val writes = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    override def overwrite(table: String, df: DataFrame): Unit = {
+      writes(table) += 1; super.overwrite(table, df)
+    }
+    override def upsert(table: String, df: DataFrame, tiebreak: Seq[Column]): Long = {
+      writes(table) += 1; super.upsert(table, df, tiebreak)
+    }
+    override def appendIgnore(table: String, df: DataFrame, tiebreak: Seq[Column]): Long = {
+      writes(table) += 1; super.appendIgnore(table, df, tiebreak)
+    }
   }
 
   private def runOnce(): (TableStore, graft.pipeline.RunReport) = {
@@ -148,6 +163,44 @@ class PipelineSpec extends SparkSpec {
     for (t <- Seq("insumos", "composicoes"))
       assert(report.recordsInserted(t) == store.read(t).count(),
         s"inexact inserted count for $t")
+  }
+
+  test("a monthly run publishes each catalog exactly once") {
+    val store = new CountingStore(tmpDir("graft_wh"))
+    store.createTables() // bootstrap writes are not the run's
+    store.writes.clear()
+    val report = new PipelineETL(spark, store, EngineConfig.load(env = Map.empty))
+      .run(fixtures(), 2025, 1)
+    assert(report.status == "SUCESSO", report)
+    assert(store.writes("insumos") == 1, store.writes)
+    assert(store.writes("composicoes") == 1, store.writes)
+  }
+
+  test("maintenance-only month flips the deactivated code and nothing else") {
+    val store = new CountingStore(tmpDir("graft_wh"))
+    val pipeline = new PipelineETL(spark, store, EngineConfig.load(env = Map.empty))
+    pipeline.run(fixtures(), 2025, 1)
+    def catalogs() = Seq("insumos", "composicoes")
+      .map(t => t -> store.read(t).collect().map(r => r.getInt(0) -> r).toMap).toMap
+    val before = catalogs()
+    assert(before("insumos")(1).getAs[String]("status") == "ATIVO")
+
+    val dir = Paths.get(tmpDir("graft_staging_manut"))
+    write(dir, "Manutencoes_202502.csv",
+      "SINAPI - Relatório de Manutenções;;;;",
+      "Referência;Tipo;Código;Descrição;Manutenção",
+      "02/2025;INSUMO;1;AREIA MÉDIA;DESATIVAÇÃO")
+    store.writes.clear()
+    val report = pipeline.run(dir.toString, 2025, 2)
+    assert(report.status == "SUCESSO", report)
+    assert(report.recordsInserted == Map("manutencoes_historico" -> 1L))
+    assert(store.writes("insumos") == 1 && store.writes("composicoes") == 1, store.writes)
+
+    val after = catalogs()
+    assert(after("insumos")(1).getAs[String]("status") == "DESATIVADO")
+    assert(after("insumos") - 1 == before("insumos") - 1)
+    assert(after("insumos")(1).toSeq.init == before("insumos")(1).toSeq.init)
+    assert(after("composicoes") == before("composicoes"))
   }
 
   test("monthly re-run is idempotent (conflict policies hold)") {
