@@ -55,11 +55,11 @@ object ExtensionQueries {
     base.unionByName(clones).unionByName(truncDocs(docs))
   }
 
-  /** documents with the native functions registered and the (single
-    * parquet file) source fanned out for compute-heavy per-doc stages —
-    * CONDITIONALLY, via the same guard as the dedup operators: a
-    * well-partitioned 100 TB source must not pay a corpus-wide
-    * round-robin shuffle just to enter a per-doc projection. */
+  /** documents with the (single parquet file) source fanned out for
+    * compute-heavy per-doc stages — CONDITIONALLY, via the same guard as
+    * the dedup operators: a well-partitioned 100 TB source must not pay
+    * a corpus-wide round-robin shuffle just to enter a per-doc
+    * projection. */
   private def docsFanned(s: SparkSession, d: String): DataFrame =
     TextDedup.fanOut(Tables.documents(s, d))
 

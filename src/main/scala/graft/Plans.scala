@@ -3,8 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Physical-plan audit artifact generator (`PLANS_r{N}.md`): dumps the
   * initial (pre-AQE) executed plan of every declared query, condensed to
   * the lines that matter for a scale review — exchanges, joins,
@@ -21,48 +19,7 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1).getOrElse("PLANS_r3.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE partition headroom: start wide so big-stage aggregates and
-      // sorts never funnel millions of keys through one task (the r9
-      // 100x probe measured pageRank's edge distinct going 28x super-
-      // linear on exactly this cliff: 7.5M keys/partition at width 16
-      // spills; width 256 restored ~linear scaling, 420 -> 255 s).
-      // AQE coalesces small stages back down to the advisory size, so
-      // sf0.001-sized queries pay nothing. A real cluster sizes this
-      // to data volume; 8 threads of headroom per core is the local
-      // stand-in.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        math.max(128, cpus.toInt * 8))
-      // Coalesce post-shuffle stages to the ADVISORY SIZE, not to the
-      // core count (guide §2.2: size partitions to data, not cores):
-      // with the default parallelismFirst=true a KB-sized stage still
-      // runs `defaultParallelism` tasks, and at local[32] the per-task
-      // scheduling overhead (single-threaded DAGScheduler event loop)
-      // dominates small queries — measured on a 45-query sf0.1 slice:
-      // 79.2 s → 64.9 s best-of-2 (single-pass 182 → 121 s). At 100 TB
-      // the same setting yields the same wide stages as before, because
-      // data volume, not core count, then drives the width.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      // ...with the advisory size PARAMETERISED and a local default that
-      // keeps CPU-dense stages parallel: coalescing is size-based, but a
-      // stage can be compute-bound on few bytes (q97's in-core triangle
-      // intersections: 5.8 MB shuffle, ~7 s CPU — 64 MB advisory funnels
-      // it into ONE task). 2 MB at sf0.1 (~100 MB inputs) is the same
-      // partitions-per-input ratio a 64-256 MB advisory gives cluster
-      // inputs; production sets SPARK_GRAFT_ADVISORY_PART accordingly.
-      // Measured (best-of-2, sf0.1, 32c): CPU-dense 12-query slice
-      // 75.4 s @64m -> 47.7 s @2m; scheduling-bound 45-query slice
-      // 79.2 s (parallelismFirst=true) -> 59.2 s.
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PART", "2m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = RunnerSession.create()
     val sb = new StringBuilder(
       s"# Physical plans (initial, pre-AQE) at $sfDir\n")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

@@ -3,7 +3,6 @@ package graft
 import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only stage-level profiler: run one named query with the bench
   * session config and print, per completed stage, the wall duration,
@@ -23,43 +22,7 @@ object ProfileOne {
     val confs = args.filter(_.contains("=")).map { a =>
       val i = a.indexOf('='); (a.take(i), a.drop(i + 1))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        math.max(128, cpus.toInt * 8))
-      // Coalesce post-shuffle stages to the ADVISORY SIZE, not to the
-      // core count (guide §2.2: size partitions to data, not cores):
-      // with the default parallelismFirst=true a KB-sized stage still
-      // runs `defaultParallelism` tasks, and at local[32] the per-task
-      // scheduling overhead (single-threaded DAGScheduler event loop)
-      // dominates small queries — measured on a 45-query sf0.1 slice:
-      // 79.2 s → 64.9 s best-of-2 (single-pass 182 → 121 s). At 100 TB
-      // the same setting yields the same wide stages as before, because
-      // data volume, not core count, then drives the width.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      // ...with the advisory size PARAMETERISED and a local default that
-      // keeps CPU-dense stages parallel: coalescing is size-based, but a
-      // stage can be compute-bound on few bytes (q97's in-core triangle
-      // intersections: 5.8 MB shuffle, ~7 s CPU — 64 MB advisory funnels
-      // it into ONE task). 2 MB at sf0.1 (~100 MB inputs) is the same
-      // partitions-per-input ratio a 64-256 MB advisory gives cluster
-      // inputs; production sets SPARK_GRAFT_ADVISORY_PART accordingly.
-      // Measured (best-of-2, sf0.1, 32c): CPU-dense 12-query slice
-      // 75.4 s @64m -> 47.7 s @2m; scheduling-bound 45-query slice
-      // 79.2 s (parallelismFirst=true) -> 59.2 s.
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PART", "2m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeatInterval", "30s")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = RunnerSession.create()
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
 
     final case class St(var wallMs: Long = 0, var tasks: Int = 0,

@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.functions.GraftFunctions
 import graft.ops.{Relational, TreeExplode}
 
 /** Driver contract — one `queries` entry (+ DuckDB oracle SQL) per
@@ -189,7 +188,6 @@ object SparkEntry {
 
     // F1 normalize_text as a native codegen'd Catalyst expression
     "q14_normalize_text" -> ((s, d) => {
-      GraftFunctions.register(s)
       Tables.part(s, d)
         .select(col("p_partkey"), expr("normalize_text(p_name)").as("norm_name"),
           expr("normalize_text(p_type)").as("norm_type"))

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -29,51 +28,4 @@ case class NormalizeTextExpr(child: Expression, header: Boolean)
 
   override protected def withNewChildInternal(newChild: Expression): NormalizeTextExpr =
     copy(child = newChild)
-}
-
-/** Session-level registration of graft's native SQL functions. */
-object GraftFunctions {
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "normalize_text", es => NormalizeTextExpr(es.head, header = false), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "normalize_header", es => NormalizeTextExpr(es.head, header = true), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_polyhash", es => PolyHashExpr(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_dot", es => DotProductExpr(es.head, es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_simhash30", es => SimHashExpr(es.head, bits = 30), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_jlproject", es => JlProjectExpr(es.head,
-        es(1).eval().asInstanceOf[Number].intValue(),
-        es(2).eval().asInstanceOf[Number].intValue()), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_pqassign", es => PqAssignExpr(es.head, es(1),
-        es(2).eval().asInstanceOf[Number].intValue(),
-        es(3).eval().asInstanceOf[Number].intValue()), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_minhash16", es => MinHashExpr(es.head, k = 16), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_bytemax", es => ByteMaxAgg(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_hllpack", es => HllPackAgg(es.head, es(1),
-        es(2).eval().asInstanceOf[Number].intValue()), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_unpack_bytes", es => UnpackBytesExpr(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_mg", es => MgSummaryAgg(es.head,
-        es(1).eval().asInstanceOf[Number].intValue()), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_jaro_winkler", es => JaroWinklerExpr(es.head, es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_swarmax", es => SwarByteMaxExpr(es.head, es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_packmax", es => PackedRegMaxAgg(es.head,
-        es(1).eval().asInstanceOf[Number].intValue()), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_mgw", es => MgWeightedAgg(es.head, es(1),
-        es(2).eval().asInstanceOf[Number].intValue()), "scala_udf")
-  }
 }

@@ -23,9 +23,10 @@ object TextFeatures {
   /** Polynomial code-point hash of a string: fold(acc*31 + codepoint) mod
     * HashMod. Cross-engine primitive — DuckDB: list_reduce over
     * list_transform(split(s,''), ascii). Compiled as the native
-    * [[PolyHashExpr]] (registered per-session by [[GraftFunctions]]) —
-    * the interpreted-HOF spelling walks an expression tree per character,
-    * which dominates the dedup/fingerprint operators' runtime. */
+    * [[PolyHashExpr]] (registered by [[GraftSparkExtensions]], which every
+    * session running graft ops installs) — the interpreted-HOF spelling
+    * walks an expression tree per character, which dominates the
+    * dedup/fingerprint operators' runtime. */
   def charHash(s: Column): Column = call_function("graft_polyhash", s)
 
   /** Word n-gram shingles joined by single spaces; fewer than n tokens →

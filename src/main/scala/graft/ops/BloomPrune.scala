@@ -41,7 +41,6 @@ object BloomPrune {
   def bloomBits(keys: DataFrame, keyExpr: Column, mBits: Int, k: Int): Array[Long] = {
     require(mBits % 64 == 0 && mBits > 0, "mBits must be a positive multiple of 64")
     require(k >= 1 && k <= 8, "bloomBits needs 1 <= k <= 8")
-    graft.functions.GraftFunctions.register(keys.sparkSession)
     val h = TextFeatures.charHash(keyExpr)
     val pos = keys.select(explode(array(positions(h, mBits, k): _*)).as("pos")).distinct()
     val words = pos
@@ -72,7 +71,6 @@ object BloomPrune {
                      bigKey: Column, keysKey: Column,
                      mBits: Int = 1 << 16, k: Int = 2): DataFrame = {
     val bits = bloomBits(keys, keysKey, mBits, k)
-    graft.functions.GraftFunctions.register(big.sparkSession)
     val bh = TextFeatures.charHash(bigKey)
     big.filter(mightContain(bh, bits, mBits, k))
       .join(keys.select(TextFeatures.charHash(keysKey).as("__kh")).distinct(),
@@ -85,7 +83,6 @@ object BloomPrune {
                 bigKey: Column, keysKey: Column,
                 mBits: Int = 1 << 16, k: Int = 2): (Long, Long) = {
     val bits = bloomBits(keys, keysKey, mBits, k)
-    graft.functions.GraftFunctions.register(big.sparkSession)
     val bh = TextFeatures.charHash(bigKey)
     (big.count(), big.filter(mightContain(bh, bits, mBits, k)).count())
   }
@@ -112,7 +109,6 @@ object BloomPrune {
                 k: Int = 2): DataFrame = {
     val bits = bloomBits(keys, keyExpr, mBits, k)
     val bitsSet = bits.map(java.lang.Long.bitCount(_).toLong).sum
-    graft.functions.GraftFunctions.register(keys.sparkSession)
     val keyH = keys.select(TextFeatures.charHash(keyExpr).as("__h")).distinct()
       .localCheckpoint(eager = false) // forked: anti join + key count
     val neg = probes.select(TextFeatures.charHash(probeExpr).as("__h"))

@@ -72,7 +72,6 @@ object BpeTrainer {
                             batchK: Int = 64): (DataFrame, Int) = {
     require(rounds >= 1, "BPE training needs at least one round")
     require(batchK >= 1, s"non-positive merge batch size: $batchK")
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val spark = docs.sparkSession
     // the corpus → word-frequency vocabulary collapse: the ONLY
     // corpus-sized pass in the whole training run
@@ -179,7 +178,6 @@ object BpeTrainer {
     */
   def applyMerges(docs: DataFrame, textCol: String,
                   merges: Seq[(String, String)]): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val vocab = docs
       .select(explode(TextFeatures.tokens(col(textCol))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("n"))

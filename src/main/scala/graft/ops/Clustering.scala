@@ -46,7 +46,6 @@ object Clustering {
     */
   def farthestPointSeeds(corpus: DataFrame, idCol: String, vecCol: String,
                          k: Int): Seq[(Long, Array[Float])] = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val src = corpus.select(col(idCol).as("vec_id"), col(vecCol).as("v"))
       .localCheckpoint()
     val first = src.orderBy("vec_id").limit(1)
@@ -81,7 +80,6 @@ object Clustering {
   def lloydAssignFrom(corpus: DataFrame, idCol: String, vecCol: String,
                       seeds: Seq[(Long, Array[Float])], iters: Int): DataFrame = {
     require(iters >= 1, "need at least one assignment pass")
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val src = corpus.select(col(idCol).as("vec_id"), col(vecCol).as("v"))
       .localCheckpoint() // scanned 2×/iteration; don't re-read the source
     var centroids: Seq[(Long, Array[Float])] = seeds
@@ -137,7 +135,6 @@ object Clustering {
     * the spread-seeking alternative). */
   def lloydAssign(corpus: DataFrame, idCol: String, vecCol: String,
                   k: Int, iters: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val seeds = corpus.select(col(idCol).as("vec_id"), col(vecCol).as("v"))
       .orderBy("vec_id").limit(k)
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq

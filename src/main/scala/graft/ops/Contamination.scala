@@ -47,7 +47,6 @@ object Contamination {
   def semanticOverlap(corpus: DataFrame, evalSet: DataFrame,
                       idCol: String, vecCol: String,
                       threshold: Double): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val c = corpus.select(col(idCol), col(vecCol).as("__cv"))
     val s = evalSet.select(col(idCol).as("near_seed"), col(vecCol).as("__sv"))
     // Partial-aggregable argmax: MIN over the struct (−cosine, seed)
@@ -75,7 +74,6 @@ object Contamination {
 
   def ngramOverlap(corpus: DataFrame, evalSet: DataFrame,
                    idCol: String, textCol: String, n: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     def grams(df: DataFrame): DataFrame = df.select(
       col(idCol).as("doc_id"),
       explode(array_distinct(transform(
@@ -112,7 +110,6 @@ object Contamination {
                        minContainPpm: Long, maxShingleDf: Long): DataFrame = {
     require(shingleN >= 1, "containmentPairs needs shingleN >= 1")
     require(maxShingleDf >= 1, "containmentPairs needs maxShingleDf >= 1")
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     def sh(df: DataFrame, out: String): DataFrame = df
       .select(col(idCol).as(out), tokens(col(textCol)).as("__toks"))
       .filter(size(col("__toks")) >= shingleN)
@@ -176,7 +173,6 @@ object Contamination {
   def scrubSpans(corpus: DataFrame, evalSet: DataFrame,
                  idCol: String, textCol: String, n: Int): DataFrame = {
     require(n >= 1, s"span n-gram size must be positive: $n")
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val evalGrams = evalSet.select(
       explode(array_distinct(transform(
         shingles(tokens(col(textCol)), n), s => charHash(s)))).as("__g"))
@@ -211,7 +207,6 @@ object Contamination {
                          idCol: String, textCol: String,
                          n: Int): DataFrame = {
     require(n >= 1, s"span n-gram size must be positive: $n")
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val evalGrams = evalSet.select(
       explode(array_distinct(transform(
         shingles(tokens(col(textCol)), n), s => charHash(s)))).as("__g"))

@@ -26,7 +26,6 @@ object Curation {
   def curate(docs: DataFrame, idCol: String, textCol: String,
              minTokens: Int = 5, minAlphaRatio: Double = 0.5,
              nearDupThreshold: Double = 0.75): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val toks = tokens(col(textCol))
     // \p{L} (any Unicode letter), NOT [a-zA-Z]: this engine's domain is
     // Portuguese text — ASCII-only alpha would count every Ç/Ã/É against
@@ -125,7 +124,6 @@ object Curation {
                   Seq("train" -> 80, "val" -> 90, "test" -> 100)): DataFrame = {
     require(cuts.nonEmpty && cuts.last._2 == 100 &&
       cuts.map(_._2) == cuts.map(_._2).sorted, "cuts must ascend to 100")
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     // charHash is already non-negative (mod 1e9+7 fold), so % is safe
     val bucket = charHash(concat(col(textCol), lit("#"), col(idCol).cast("string"))) % 100
     val split = cuts.init.foldRight(lit(cuts.last._1): org.apache.spark.sql.Column) {
@@ -165,7 +163,6 @@ object Curation {
                          Seq("train" -> 80, "val" -> 90, "test" -> 100)): DataFrame = {
     require(cuts.nonEmpty && cuts.last._2 == 100 &&
       cuts.map(_._2) == cuts.map(_._2).sorted, "cuts must ascend to 100")
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val labels = ConnectedComponents.labels(pairs)
     val grouped = docs
       .join(labels, docs(idCol) === labels("node"), "left")
@@ -232,7 +229,6 @@ object Curation {
   def stratifiedKFold(docs: DataFrame, idCol: String, textCol: String,
                       strataCol: String, k: Int): DataFrame = {
     require(k >= 2, s"need at least 2 folds: $k")
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val keyed = docs.select(struct(col(strataCol).as("g"),
         charHash(concat(col(textCol), lit("#"),
           col(idCol).cast("string"))).as("h"),
@@ -506,7 +502,6 @@ object Curation {
                        toShards: Int): DataFrame = {
     require(fromShards >= 1 && toShards >= 1 && fromShards != toShards,
       s"need two distinct positive shard counts: $fromShards, $toShards")
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.select(rendezvousShard(keyExpr, fromShards).as("__a"),
         rendezvousShard(keyExpr, toShards).as("__b"))
       .agg(count(lit(1)).as("n_rows"),
@@ -621,7 +616,6 @@ object Curation {
     */
   def sourceInterleave(docs: DataFrame, idCol: String, textCol: String,
                        sourceCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val keyed = docs.select(struct(col(sourceCol).as("g"),
         charHash(concat(col(textCol), lit("#"),
           col(idCol).cast("string"))).as("h"),
@@ -672,7 +666,6 @@ object Curation {
   def matchResample(corpus: DataFrame, reference: DataFrame, idCol: String,
                     textCol: String, bucketWidth: Int): DataFrame = {
     require(bucketWidth >= 1, s"non-positive bucket width: $bucketWidth")
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val base = corpus.select(col(idCol).as("doc_id"),
         charHash(concat(col(textCol), lit("#"), col(idCol).cast("string")))
           .as("__h"),
@@ -795,7 +788,6 @@ object Curation {
                      weightExpr: Column, k: Int): DataFrame = {
     require(k >= 1, s"sample size must be at least 1: $k")
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val base = df
       .select(col(groupCol).as("__g"), idExpr.cast("long").as("__id"),
         weightExpr.cast("long").as("__w"))

@@ -351,7 +351,6 @@ object EvalMetrics {
   def rougeN(pairs: DataFrame, idCol: String, candCol: String,
              refCol: String, n: Int): DataFrame = {
     require(n >= 1, s"ROUGE gram size must be positive: $n")
-    graft.functions.GraftFunctions.register(pairs.sparkSession)
     import graft.functions.TextFeatures.{charHash, tokens}
     val toks = pairs.select(col(idCol).as("pair_id"),
         tokens(col(candCol)).as("__ct"), tokens(col(refCol)).as("__rt"))

@@ -197,7 +197,6 @@ object FuzzyJoin {
                        minPpm: Long): DataFrame = {
     require(minPpm >= 1 && minPpm <= 1000000,
       s"minPpm must sit in [1, 1000000]: $minPpm")
-    graft.functions.GraftFunctions.register(names.sparkSession)
     val base = names
       .select(col(blockCol).as("__blk"), col(nameCol).as("__name"))
       .filter(col("__name").isNotNull && col("__blk").isNotNull)

@@ -961,7 +961,6 @@ object GraphRank {
   def hyperBall(edges: DataFrame, radii: Int, p: Int = 6): DataFrame = {
     require(radii >= 1 && radii <= 30, s"radii must sit in [1, 30]: $radii")
     require(p >= 3, s"packed layout needs p >= 3 (full lane-longs): $p")
-    graft.functions.GraftFunctions.register(edges.sparkSession)
     val nLongs = (1 << p) / 8
     val nodes = edges.select(col("a").as("node"))
       .unionByName(edges.select(col("b").as("node"))).distinct()

@@ -97,7 +97,6 @@ object Packing {
     require(chunkTokens >= 1, s"chunkTokens must be >= 1, got $chunkTokens")
     require(stride >= 1 && stride <= chunkTokens,
       s"stride must be in [1, chunkTokens], got $stride")
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
       .select(col(idCol), graft.functions.TextFeatures.tokens(col(textCol)).as("__toks"))
       .filter(size(col("__toks")) >= 1)

@@ -624,7 +624,6 @@ object Profiler {
   def bootstrapCi(df: DataFrame, groupCol: String, idExpr: Column,
                   valueExpr: Column, reps: Int = 50): DataFrame = {
     require(reps >= 2, s"reps must be >= 2: $reps")
-    graft.functions.GraftFunctions.register(df.sparkSession)
     import graft.functions.TextFeatures
     // exact ⌊cdf·(10⁹+7)⌋ of Poisson(1) at w = 0..4; the tail is w = 5
     val cuts = Seq(367879443L, 735758887L, 919698609L, 981011849L, 996340160L)
@@ -823,7 +822,6 @@ object Profiler {
     */
   def dataCard(docs: DataFrame, idCol: String, textCol: String,
                langCol: String, sourceCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     import graft.functions.TextFeatures
     val base = docs.select(col(langCol).as("lang"), col(sourceCol).as("source"),
         TextFeatures.charHash(col(textCol)).as("h"),

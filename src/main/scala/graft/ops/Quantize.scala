@@ -67,7 +67,6 @@ object Quantize {
   def pqCodes(corpus: DataFrame, idCol: String, vecCol: String,
               m: Int = 8, ksub: Int = 16): DataFrame = {
     require(m >= 1 && ksub >= 1, s"pqCodes needs m, ksub >= 1: $m, $ksub")
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val cbRows = corpus.select(col(idCol).cast("long").as("__i"),
         col(vecCol).as("__v"))
       .orderBy(col("__i")).limit(ksub).collect()

@@ -14,7 +14,7 @@ object Similarity {
   /** dot(a,b) in double precision, index order — the native codegen'd
     * [[graft.functions.DotProductExpr]] (same fold order as the HOF
     * spelling `aggregate(zip_with(...))`, so bit-identical results, at
-    * compiled-loop speed). Callers register via GraftFunctions. */
+    * compiled-loop speed), resolved through [[graft.functions.GraftSparkExtensions]]. */
   def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
 
   def l2norm(a: Column): Column = sqrt(dot(a, a))
@@ -28,7 +28,6 @@ object Similarity {
     */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                      vecCol: String, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"))
     val scored = c.crossJoin(broadcast(q))
@@ -66,7 +65,6 @@ object Similarity {
     */
   def lshTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
               vecCol: String, k: Int, planes: Int = 8): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"),
       signBucket(col(vecCol), planes).as("__bucket"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"),
@@ -96,7 +94,6 @@ object Similarity {
     */
   def multiProbeTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                      vecCol: String, k: Int, planes: Int = 8): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val masks = array((Seq(0L) ++ (0 until planes).map(i => 1L << i))
       .map(lit(_)): _*)
     val q0 = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"),
@@ -132,7 +129,6 @@ object Similarity {
     */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
               vecCol: String, k: Int, nlist: Int = 16, nprobe: Int = 2): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val seeds = corpus.filter(col(idCol) < nlist)
       .select(col(idCol).as("cid"), col(vecCol).as("__ce"))
     def nearest(df: DataFrame, id: String, vec: String, n: Int): DataFrame =
@@ -179,7 +175,6 @@ object Similarity {
   def nearDupCandidates(corpus: DataFrame, idCol: String, vecCol: String,
                         planes: Int = 8, bands: Int = 2,
                         bucketCap: Long = 10000L): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     // One row per (vector, band). Materialized: the bucket fold is an
     // interpreted HOF and the frame is read twice (size agg + join).
     val banded = corpus.select(col(idCol).as("id"), col(vecCol).as("v"),
@@ -215,7 +210,6 @@ object Similarity {
     * analogue of the dedup tier's band/window indexes. */
   def nearDupIndex(corpus: DataFrame, idCol: String, vecCol: String,
                    planes: Int = 8, bands: Int = 2): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     corpus.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"),
         posexplode(array((0 until bands).map(j =>
           signBucketAt(col(vecCol), planes, j * planes)): _*)))
@@ -302,7 +296,6 @@ object Similarity {
   def hardNegatives(corpus: DataFrame, queries: DataFrame, idCol: String,
                     vecCol: String, k: Int,
                     dupThreshold: Double = 0.99): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val dup = nearDupPairs(corpus, idCol, vecCol, dupThreshold)
     val dupKeys = dup.select(col("id_a").as("query_id"), col("id_b").as("neighbor_id"))
       .unionByName(dup.select(col("id_b").as("query_id"), col("id_a").as("neighbor_id")))
@@ -373,7 +366,6 @@ object Similarity {
                        vecCol: String, k: Int, dims: Seq[Int]): DataFrame = {
     require(dims.nonEmpty && dims.forall(_ >= 1),
       s"matryoshka widths must be positive: $dims")
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     // slice() silently clamps an oversized width to the full vector, so
     // an out-of-domain dims entry would report full-width recall —
     // raise loudly instead, consistent with the house discipline
@@ -445,7 +437,6 @@ object Similarity {
     require(lambdaHundredths >= 0 && lambdaHundredths <= 100,
       s"lambda out of [0, 100]: $lambdaHundredths")
     val spark = corpus.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     val lam = lambdaHundredths / 100.0
     val oneMinus = (100 - lambdaHundredths) / 100.0
     val src = corpus
@@ -555,7 +546,6 @@ object Similarity {
     // compiled pass instead of dims·outDims interpreted tree nodes per
     // row (and per CONSUMER: projection collapse re-evaluated the HOF
     // nest for each reference; measured 9.4 → 0.5 s on q84 at sf0.1).
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.select(col(idCol),
         call_function("graft_jlproject", col(vecCol),
           lit(dims), lit(outDims)).as("__pr"))

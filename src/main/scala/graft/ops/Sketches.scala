@@ -48,7 +48,6 @@ object Sketches {
     */
   def kmvDistinct(df: DataFrame, groupCol: String, valueExpr: Column,
                   k: Int = 64): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     kmvFromHashed(df
       .select(col(groupCol), TextFeatures.charHash(valueExpr).as("__h"))
       .distinct(), // one shuffle: distinct (group, hash)
@@ -82,7 +81,6 @@ object Sketches {
     * join keys, and ids. */
   def countMinCellsOf(df: DataFrame, keyExpr: Column,
                       depth: Int = 3, width: Int = 512): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val p = TextFeatures.HashMod
     df
       .select(TextFeatures.charHash(keyExpr.cast("string")).as("__h"))
@@ -150,7 +148,6 @@ object Sketches {
   def countMinHeavyHitters(docs: DataFrame, textCol: String,
                            depth: Int = 3, width: Int = 512,
                            minCount: Long = 1L): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val p = TextFeatures.HashMod
     val cells = countMinCells(docs, textCol, depth, width)
     val probes = docs
@@ -198,7 +195,6 @@ object Sketches {
   def kmvPairwiseJaccard(df: DataFrame, groupCol: String, valueExpr: Column,
                          k: Int = 64): DataFrame = {
     require(k >= 2, "KMV needs k >= 2")
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val sk = df
       .select(col(groupCol).as("g"), TextFeatures.charHash(valueExpr).as("__h"))
       .distinct()
@@ -290,7 +286,6 @@ object Sketches {
   private[graft] def hllRhoRows(df: DataFrame, groupCol: String,
                                 valueExpr: Column, p: Int): DataFrame = {
     require(p >= 2 && p <= 14, "hllRegisters needs 2 <= p <= 14")
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val m = 1L << p
     val h = mix(TextFeatures.charHash(valueExpr))
     val r = (h / m).cast("long")
@@ -607,7 +602,6 @@ object Sketches {
       s"heavyHittersByWeightShare: sharePpm=$sharePpm needs k+1 > " +
         s"1e6/sharePpm = ${1000000.0 / sharePpm} (got k=$k) or items can " +
         "silently miss the candidate set")
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val vals = df.select(value.cast("string").as("item"),
         weight.cast("long").as("__w"))
       .filter(col("item").isNotNull && col("__w").isNotNull)
@@ -632,7 +626,6 @@ object Sketches {
     * exact broadcast-semi-join recount over the ≤ k candidates. */
   private def mgRecount(df: DataFrame, value: Column,
                         k: Int): (DataFrame, Long) = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val vals = df.select(value.cast("string").as("item"))
       .filter(col("item").isNotNull)
       .localCheckpoint(eager = false) // forked: summary pass + recount pass

@@ -42,7 +42,6 @@ object TermStats {
     */
   def tfidfTopTerms(docs: DataFrame, idCol: String, textCol: String,
                     k: Int = 3): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val base = docs.select(col(idCol).as("doc_id"),
         TextFeatures.tokens(col(textCol)).as("__toks"))
       .localCheckpoint() // read twice: corpus count + term explode
@@ -86,7 +85,6 @@ object TermStats {
   def bm25Rank(docs: DataFrame, idCol: String, textCol: String,
                queryTerms: Seq[String], k1: Double = 1.2, b: Double = 0.75,
                topK: Int = 100): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val base = docs.select(col(idCol).as("doc_id"),
         TextFeatures.tokens(col(textCol)).as("__toks"))
       .select(col("doc_id"), col("__toks"), size(col("__toks")).cast("long").as("dl"))
@@ -138,7 +136,6 @@ object TermStats {
     *         with ≥ 3 tokens (both gram orders defined).
     */
   def repetitionStats(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val base = docs
       .select(col(idCol).as("doc_id"), TextFeatures.tokens(col(textCol)).as("__toks"))
       .filter(size(col("__toks")) >= 3)
@@ -179,7 +176,6 @@ object TermStats {
   def charGramConcentration(docs: DataFrame, idCol: String,
                             textCol: String, n: Int): DataFrame = {
     require(n >= 1, s"char-gram width must be at least 1: $n")
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs.select(col(idCol).as("doc_id"), col(textCol).as("__t"))
       .filter(length(col("__t")) >= n)
       .select(col("doc_id"), explode(transform(
@@ -212,7 +208,6 @@ object TermStats {
     */
   def invertedIndex(docs: DataFrame, idCol: String, textCol: String,
                     minDf: Long = 2, maxDf: Long = 100): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val termDoc = docs
       .select(col(idCol).as("doc_id"),
         explode(array_distinct(TextFeatures.tokens(col(textCol)))).as("term"))
@@ -344,7 +339,6 @@ object TermStats {
     * join strategy is left to AQE — nothing is force-broadcast.
     */
   def bigramLmScore(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     // (doc, prefix-hash, bigram-hash) occurrence counts. Bigrams ride as
     // fixed-width hashes (the dedup-family convention): a collision
     // merges two bigrams identically in the model AND the scoring pass,
@@ -397,7 +391,6 @@ object TermStats {
     */
   def pmiCollocations(docs: DataFrame, idCol: String, textCol: String,
                       minCount: Long = 5, topK: Int = 50): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val toks = docs
       .select(col(idCol).as("doc_id"), TextFeatures.tokens(col(textCol)).as("__toks"))
       .localCheckpoint() // forked: unigram and bigram occurrence passes
@@ -447,7 +440,6 @@ object TermStats {
     */
   def stratifiedSample(df: DataFrame, stratumCol: String, idCol: String,
                        orderHash: Column, perStratum: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.withColumn("__h", orderHash)
       .withColumn("rnk", row_number().over(
         Window.partitionBy(stratumCol).orderBy(col("__h").asc, col(idCol).asc))
@@ -617,7 +609,6 @@ object TermStats {
   def ngramNovelty(docs: DataFrame, idCol: String, textCol: String,
                    n: Int = 3): DataFrame = {
     require(n >= 1, "ngramNovelty needs n >= 1")
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val grams = docs
       .select(col(idCol), explode(array_distinct(TextFeatures.shingleHashes(
         TextFeatures.shingles(TextFeatures.tokens(col(textCol)), n)))).as("__g"))
@@ -795,7 +786,6 @@ object TermStats {
     */
   def domainRelevancePpm(docs: DataFrame, idCol: String, textCol: String,
                          targetCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val occ = docs
       .select(col(idCol).as("doc_id"), col(targetCol).cast("boolean").as("__t"),
         explode(TextFeatures.tokens(col(textCol))).as("__tok"))

@@ -15,8 +15,7 @@ import graft.functions.TextFeatures._
 object TextDedup {
 
   /** Spread a (possibly single-partition) source across the cluster
-    * before a compute-heavy per-row stage, and make sure the native
-    * graft functions (polyhash) are registered on this session.
+    * before a compute-heavy per-row stage.
     *
     * CONDITIONAL: only repartitions when the source is meaningfully
     * under-split (< half the cluster's parallelism — the single-file
@@ -28,7 +27,6 @@ object TextDedup {
     * the exchange feeds a localCheckpoint, so operator-level final plans
     * start at the checkpoint's RDD scan and can't show it). */
   private[graft] def fanOut(df: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < (target + 1) / 2) df.repartition(target)
     else df
@@ -40,7 +38,6 @@ object TextDedup {
     * itself; the full text only rides along for collision confirmation.
     */
   def exactDupGroups(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs.groupBy(charHash(col(textCol)).as("__h"), col(textCol))
       .agg(min(col(idCol)).as("canonical_id"), count(lit(1)).as("n_copies"))
       .filter(col("n_copies") > 1)
@@ -69,7 +66,6 @@ object TextDedup {
   def provenanceDedup(corpora: Seq[(String, DataFrame)], idCol: String,
                       textCol: String): DataFrame = {
     require(corpora.nonEmpty, "provenanceDedup needs at least one corpus")
-    graft.functions.GraftFunctions.register(corpora.head._2.sparkSession)
     val tagged = corpora.zipWithIndex.map { case ((tag, df), pri) =>
       df.select(lit(pri.toLong).as("__pri"), lit(tag).as("__src"),
         col(idCol).as("__id"), col(textCol).as("__text"))
@@ -278,7 +274,6 @@ object TextDedup {
   private[graft] def bandedSigsStreamSafe(docs: DataFrame, idCol: String,
                                           textCol: String, shingleN: Int,
                                           k: Int, bands: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
       .withColumn("__toks", tokens(col(textCol)))
       .filter(size(col("__toks")) >= shingleN)
@@ -360,7 +355,6 @@ object TextDedup {
     */
   def blockBoilerplate(docs: DataFrame, idCol: String, textCol: String,
                        blockTokens: Int = 5, maxBlockDf: Long = 2): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val blocks = fanOut(docs)
       .select(col(idCol).as("doc_id"), tokens(col(textCol)).as("__toks"))
       .filter(size(col("__toks")) >= 1)
@@ -412,7 +406,6 @@ object TextDedup {
   def dupSpanCoverage(docs: DataFrame, idCol: String, textCol: String,
                       windowTokens: Int = 5): DataFrame = {
     require(windowTokens >= 1, "span window must be at least one token")
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val wins = fanOut(docs)
       .select(col(idCol).as("doc_id"), tokens(col(textCol)).as("__toks"))
       .filter(size(col("__toks")) >= windowTokens)
@@ -470,7 +463,6 @@ object TextDedup {
     require(k >= 1 && w >= 1, "winnowing needs k >= 1 and w >= 1")
     val M = 1L << 21 // position encoder radix AND max doc length
     val P = 1000000007L
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val grams = fanOut(docs)
       .select(col(idCol).as("doc_id"), col(textCol).as("__t"))
       .filter(length(col("__t")) >= k + w - 1 && length(col("__t")) < M)
@@ -785,7 +777,6 @@ object TextDedup {
     */
   def selfSimilarityProbe(docs: DataFrame, idCol: String,
                           textCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val M = 1000003L
     val base = docs
       .select(col(idCol).as("id"),
@@ -931,7 +922,6 @@ object TextDedup {
     * family — forked into the window probe and the scrub join. */
   private def scrubToks(docs: DataFrame, idCol: String,
                         textCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
       .select(col(idCol).cast("long").as("doc_id"),
         tokens(col(textCol)).as("__toks"))

@@ -73,7 +73,6 @@ object StreamingLoad {
     */
   def dedupStream(docs: DataFrame, textCol: String, tsCol: String,
                   watermarkDelay: String = "1 hour"): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
       .withWatermark(tsCol, watermarkDelay)
       .withColumn("__h1", xxhash64(col(textCol)))
@@ -103,7 +102,6 @@ object StreamingLoad {
                 k: Int = 64): Dataset[KmvOut] = {
     val spark = rows.sparkSession
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val hashMod = graft.functions.TextFeatures.HashMod
     rows
       .select(col(groupCol).cast("string").as("g"),
@@ -172,7 +170,6 @@ object StreamingLoad {
                      depth: Int = 3, width: Int = 512): Dataset[CmOut] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val p = graft.functions.TextFeatures.HashMod
     docs
       .select(explode(graft.functions.TextFeatures.tokens(col(textCol))).as("__tok"))
@@ -206,7 +203,6 @@ object StreamingLoad {
                 p: Int = 6): Dataset[HllOut] = {
     val spark = rows.sparkSession
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     graft.ops.Sketches
       .hllRhoRows(rows.select(col(groupCol).cast("string").as("g"),
         col(valueCol)), "g", col(valueCol), p)

@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions
-
 /** The packed HLL register cells behind [[graft.ops.GraphRank.hyperBall]]:
   * graft_hllpack folds (bucket, rho) rows into one m-byte cell,
   * graft_bytemax unions cells elementwise, graft_unpack_bytes widens a
@@ -11,8 +9,6 @@ import graft.functions.GraftFunctions
   * layout plus the loud red paths. */
 class ByteMaxAggSpec extends SparkSpec {
   import spark.implicits._
-
-  GraftFunctions.register(spark)
 
   test("hllpack: cell(bucket) = max rho; untouched buckets read zero") {
     val df = Seq((1L, 0L, 3L), (1L, 0L, 7L), (1L, 2L, 1L), (2L, 3L, 30L))

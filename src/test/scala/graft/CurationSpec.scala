@@ -442,7 +442,6 @@ class CurationSpec extends SparkSpec {
   }
 
   test("rendezvousShard: minimal-move on growth, every shard occupied") {
-    graft.functions.GraftFunctions.register(spark)
     val keys = (0 until 600).map(_.toLong).toDF("k")
     val moved = keys.select(col("k"),
         Curation.rendezvousShard(col("k"), 5).as("a"),

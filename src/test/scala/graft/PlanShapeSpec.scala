@@ -363,7 +363,6 @@ class PlanShapeSpec extends SparkSpec {
     // interpreted per-row path and sort fallback this layout replaces).
     // Pinned on the pre-checkpoint round frame (the final plan reads
     // checkpoint RDDs).
-    graft.functions.GraftFunctions.register(spark)
     val und = (1L to 60L).map(i => (i, i % 30 + 1)).toDF("a", "b")
     val regs = (1L to 60L).map(i => (i, Array.fill(8)(1L))).toDF("node", "regs")
     val plan = planOf(graft.ops.GraphRank.ballRound(und, regs, 8))

@@ -16,7 +16,6 @@ class SimilaritySpec extends SparkSpec {
   ).toDF("vec_id", "embedding")
 
   test("cosine: identical=1, orthogonal=0, opposite=-1") {
-    graft.functions.GraftFunctions.register(spark)
     val out = vecs.as("a").crossJoin(vecs.as("b"))
       .filter(col("a.vec_id") === 1 && col("b.vec_id").isin(2, 4, 5))
       .select(col("b.vec_id"),
@@ -163,7 +162,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("random projection matches an in-memory ±1 LCG model") {
-    graft.functions.GraftFunctions.register(spark)
     val dims = 4
     val out = Similarity.randomProject(vecs, "vec_id", "embedding", dims, 3)
       .as[(Long, Long, Long, Long)].collect()
@@ -186,7 +184,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("random projection: short vectors read 0 past their end; bad outDims rejected") {
-    graft.functions.GraftFunctions.register(spark)
     val short = Seq((1L, Array(1.0f))).toDF("vec_id", "embedding")
     // dims=4 but only 1 element: planes see (q, 0, 0, 0)
     val p = Similarity.randomProject(short, "vec_id", "embedding", 4, 2)

@@ -383,8 +383,6 @@ class SketchesSpec extends SparkSpec {
   }
 
   test("MG summary keeps every item past the N/(k+1) bound under any partitioning") {
-    import graft.functions.GraftFunctions
-    GraftFunctions.register(spark)
     // adversarial interleave: heavy item arrives scattered between floods
     val rows = (1 to 3000).map(i => if (i % 3 == 0) "HEAVY" else s"n_$i")
     Seq(1, 17).foreach { parts =>

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.ops.SkewJoin
+import graft.functions.TextFeatures
+import graft.ops.{Quantize, Similarity, SkewJoin}
 
 class SkewExtensionsSpec extends SparkSpec {
   import spark.implicits._
@@ -46,6 +47,27 @@ class SkewExtensionsSpec extends SparkSpec {
       assert(row.getString(0) == "CODIGO_DO_ITEM")
       assert(row.getLong(1) == 96354L)
       assert(row.getDouble(2) == 1.0)
+      // the remaining functions resolve in SQL too, each equal to the value
+      // of the ops Column helper that calls it
+      def floats(xs: Float*) = xs.map(x => s"CAST($x AS FLOAT)").mkString("array(", ", ", ")")
+      val vecs = Seq((0L, Array(1f, -2f, 0.5f, 3f)), (1L, Array(-1f, 0f, 2f, 0.25f)),
+        (2L, Array(0.5f, 0.75f, -1f, 1f))).toDF("vec_id", "embedding")
+      val sql = s2.sql(
+        s"""SELECT graft_simhash30(array('a', 'a', 'b', 'c')) AS sh,
+           |       graft_minhash16(array(CAST(11 AS BIGINT), 7, 123456)) AS mh,
+           |       graft_jlproject(${floats(1f, -2f, 0.5f, 3f)}, 4, 3) AS jl,
+           |       graft_pqassign(${floats(0.5f, 0.75f, -1f, 1f)},
+           |         ${floats(1f, -2f, 0.5f, 3f, -1f, 0f, 2f, 0.25f)}, 2, 2) AS pq
+           |""".stripMargin).head()
+      assert(sql.getLong(0) == Seq(Seq("a", "a", "b", "c")).toDF("t")
+        .select(TextFeatures.simhash(col("t"), 30)).as[Long].head())
+      assert(sql.getSeq[Long](1) == Seq(Seq(11L, 7L, 123456L)).toDF("h")
+        .select(TextFeatures.minhashSignature(col("h"), 16)).as[Seq[Long]].head())
+      assert(sql.getSeq[Long](2) == Similarity.randomProject(vecs.filter(col("vec_id") === 0),
+        "vec_id", "embedding", 4, 3).orderBy("pos").select("proj").as[Long].collect().toSeq)
+      assert(sql.getSeq[Int](3).map(_.toLong) == Quantize.pqCodes(vecs, "vec_id", "embedding",
+        m = 2, ksub = 2).filter(col("vec_id") === 2).orderBy("sub").select("code")
+        .as[Long].collect().toSeq)
     } finally {
       SparkSession.setActiveSession(prev)
       SparkSession.setDefaultSession(prev)

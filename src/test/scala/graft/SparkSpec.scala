@@ -8,6 +8,8 @@ object TestSpark {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
+      // graft's SQL functions, installed the way every runner session does
+      .withExtensions(new graft.functions.GraftSparkExtensions())
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -24,7 +26,7 @@ object TestSpark {
       // GC envelopes.
       .config("spark.network.timeout", "600s")
       .config("spark.executor.heartbeatInterval", "30s")
-      // Session parity with the runners (see Bench.scala): coalesce
+      // Session parity with the runners (see RunnerSession.scala): coalesce
       // post-shuffle stages by data size, not core count — specs run
       // KB-sized frames, so per-task scheduling overhead is pure waste.
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")

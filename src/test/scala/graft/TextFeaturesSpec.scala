@@ -2,13 +2,12 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.{GraftFunctions, TextFeatures}
+import graft.functions.TextFeatures
 
 class TextFeaturesSpec extends SparkSpec {
   import spark.implicits._
 
   test("charHash matches the cross-engine polynomial fold (abc -> 96354)") {
-    GraftFunctions.register(spark)
     // ((0*31+97)%M*31+98)%M*31+99 % M = 96354 — the value the DuckDB
     // oracle computes for 'abc'; empty string hashes to 0.
     val out = Seq("abc", "").toDF("s")
@@ -17,7 +16,6 @@ class TextFeaturesSpec extends SparkSpec {
   }
 
   test("shingles: n-gram windows, under-n input yields empty (not reversed sequence)") {
-    GraftFunctions.register(spark)
     val out = Seq("a b c d", "a b").toDF("s")
       .select(TextFeatures.shingles(TextFeatures.tokens($"s"), 3).as("sh"))
       .as[Seq[String]].collect().toSeq
@@ -25,7 +23,6 @@ class TextFeaturesSpec extends SparkSpec {
   }
 
   test("minhash signature: identical docs identical, length k, stable") {
-    GraftFunctions.register(spark)
     val df = Seq("x y z w v", "x y z w v", "q r s t u").toDF("s")
       .select(TextFeatures.minhashSignature(
         TextFeatures.shingleHashes(
@@ -37,7 +34,6 @@ class TextFeaturesSpec extends SparkSpec {
   }
 
   test("simhash is tf-weighted and deterministic") {
-    GraftFunctions.register(spark)
     val out = Seq("a a a b", "a b b b", "a a a b").toDF("s")
       .select(TextFeatures.simhash(TextFeatures.tokens($"s"), 30).as("h"))
       .as[Long].collect()
