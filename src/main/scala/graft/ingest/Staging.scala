@@ -33,8 +33,8 @@ object Staging {
     * source), carried through as `__line`.
     *
     * LAZILY checkpointed: a staged sheet feeds several downstream
-    * actions per pipeline run (anti-join + count + write in
-    * appendIgnore; status sync re-reads), and zipWithIndex itself runs
+    * actions per pipeline run (the Analítico sheet feeds both edge
+    * reloads and the catalog publishes), and zipWithIndex itself runs
     * an extra partition-count job per recompute — without the mark,
     * every action re-reads and re-parses the file (r10 verdict: the
     * staged frame was recomputed per downstream action). One action

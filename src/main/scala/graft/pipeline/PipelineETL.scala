@@ -1,6 +1,11 @@
 package graft.pipeline
 
 import java.sql.Date
+import java.util.concurrent.{Callable, Executors}
+
+import scala.util.{Failure, Success, Try}
+
+import org.apache.logging.log4j.ThreadContext
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -9,6 +14,7 @@ import graft.config.EngineConfig
 import graft.ingest.{Processors, Staging}
 import graft.model.Schemas
 import graft.ops.Lifecycle
+import graft.store.TableStore
 
 /** Run contract of the reference (`etl_pipeline.py:506-511`,
   * statuses `config.py:40-42`; 8-char run id `__init__.py:64`). */
@@ -32,11 +38,29 @@ final case class RunReport(
   * Load order reaches the reference's end state (`etl_pipeline.py:340-380`):
   * maintenance log (append-ignore), edges (truncate-reload), facts
   * (append-ignore), then each catalog published once in its month-end
-  * state (upsert, placeholder repair J1-J3, status sync W1/J4). Per-sheet
-  * failures are isolated (O2, processor.py:496-500): logged into the
-  * report, the rest of the run proceeds. A failed catalog publish fails it.
+  * state (upsert, placeholder repair J1-J3, status sync W1/J4). That order
+  * fixes an end state, not a serial schedule, so the writes that do not
+  * read each other run side by side on driver threads:
+  *
+  *  - `load`: the log append (its files one after another, in name
+  *    order), both edge reloads and both fact appends — five tables, and
+  *    no write reads another's table;
+  *  - `repair_and_sync`, after every `load` write has finished: the
+  *    `insumos` and `composicoes` publishes. Each reads the log and the
+  *    edge tables and writes only itself, and status is a pure function of
+  *    the immutable log, so neither depends on when the other runs.
+  *
+  * Each write is one Spark action over a batch evaluated once; its row
+  * count is observed on the write ([[TableStore.observedCount]]), not
+  * counted by a second pass. Outcomes are recorded on the calling thread
+  * in that order, so the report does not depend on which write ends
+  * first. Per-sheet failures are isolated (O2, processor.py:496-500):
+  * logged into the report, the rest of the run proceeds; a maintenance
+  * sheet whose log append fails is such a sheet. A failed edge, fact or
+  * catalog write fails the run, once the other writes of its phase have
+  * finished.
   */
-class PipelineETL(spark: SparkSession, store: graft.store.TableStore, cfg: EngineConfig) {
+class PipelineETL(spark: SparkSession, store: TableStore, cfg: EngineConfig) {
 
   private val sheetMap: Map[String, (String, String)] =
     EngineConfig.subMap(cfg, "SHEET_MAP").map { case (k, v) =>
@@ -48,9 +72,9 @@ class PipelineETL(spark: SparkSession, store: graft.store.TableStore, cfg: Engin
     // log4j MDC is the JVM counterpart of the reference's run-scoped
     // logging handler, `etl_pipeline.py:75-113`).
     val runId = java.util.UUID.randomUUID().toString.take(8)
-    org.apache.logging.log4j.ThreadContext.put("graftRunId", runId)
+    ThreadContext.put("graftRunId", runId)
     try runInternal(runId, stagingDir, year, month)
-    finally org.apache.logging.log4j.ThreadContext.remove("graftRunId")
+    finally ThreadContext.remove("graftRunId")
   }
 
   private def runInternal(runId: String, stagingDir: String, year: Int, month: Int): RunReport = {
@@ -128,15 +152,14 @@ class PipelineETL(spark: SparkSession, store: graft.store.TableStore, cfg: Engin
       }
     }
 
-    // Phase 2a: maintenance-first (etl_pipeline.py:450-458).
-    phase("maintenance") {
-      route(_.contains("Manuten")).foreach { f =>
+    // Phase 2a: maintenance-first (etl_pipeline.py:450-458): each sheet
+    // is staged and processed here; `load` appends it to the log.
+    val maintenance = phase("maintenance") {
+      route(_.contains("Manuten")).flatMap { f =>
         isolated(f.getName) {
           val staged = Staging.stage(spark, f.getPath,
             cfg.list("MANUTENCOES_HEADER_KEYWORDS"), cfg)
-          val events = Processors.processManutencoes(staged, cfg)
-          val n = store.appendIgnore("manutencoes_historico", events)
-          inserted("manutencoes_historico") = inserted.getOrElse("manutencoes_historico", 0L) + n
+          f.getName -> Processors.processManutencoes(staged, cfg)
         }
       }
     }
@@ -182,17 +205,30 @@ class PipelineETL(spark: SparkSession, store: graft.store.TableStore, cfg: Engin
     }
 
     phase("load") {
-      // S12: edges are truncate-reloaded each month (etl_pipeline.py:359-360).
-      analitico.foreach { case (_, _, insumoEdges, subcompEdges) =>
-        Seq("composicao_insumos" -> insumoEdges, "composicao_subcomposicoes" -> subcompEdges)
-          .foreach { case (t, edges) => store.overwrite(t, edges); inserted(t) = store.read(t).count() }
+      // One lane per table: the log append (files in name order, each
+      // isolated like its sheet, O2), the edge truncate-reloads (S12,
+      // etl_pipeline.py:359-360) and the fact appends.
+      val logAppend = maintenance.map { case (sheet, events) =>
+        sheet -> (() => store.appendIgnore("manutencoes_historico", events))
       }
-      if (priceFragments.nonEmpty)
-        inserted("precos_insumos_mensal") =
-          store.appendIgnore("precos_insumos_mensal", priceFragments.reduce(_ unionByName _))
-      if (custoFragments.nonEmpty)
-        inserted("custos_composicoes_mensal") =
-          store.appendIgnore("custos_composicoes_mensal", custoFragments.reduce(_ unionByName _))
+      val edgeReloads = analitico.toSeq.flatMap { case (_, _, insumoEdges, subcompEdges) =>
+        Seq("composicao_insumos" -> insumoEdges, "composicao_subcomposicoes" -> subcompEdges)
+      }.map { case (t, edges) => t -> (() => TableStore.observedCount(edges)(store.overwrite(t, _))) }
+      val factAppends =
+        Seq("precos_insumos_mensal" -> priceFragments, "custos_composicoes_mensal" -> custoFragments)
+          .collect { case (t, fragments) if fragments.nonEmpty =>
+            t -> (() => store.appendIgnore(t, fragments.reduce(_ unionByName _)))
+          }
+      val (logOutcomes, writeOutcomes) =
+        sideBySide(runId, logAppend +: (edgeReloads ++ factAppends).map(Seq(_)))
+          .splitAt(logAppend.size)
+      logOutcomes.foreach {
+        case (_, Success(n)) =>
+          inserted("manutencoes_historico") = inserted.getOrElse("manutencoes_historico", 0L) + n
+        case (sheet, Failure(e: Exception)) => errors(sheet) = e.getMessage
+        case (_, Failure(e)) => throw e
+      }
+      writeOutcomes.foreach { case (t, outcome) => inserted(t) = outcome.get }
     }
 
     phase("repair_and_sync") {
@@ -208,16 +244,18 @@ class PipelineETL(spark: SparkSession, store: graft.store.TableStore, cfg: Engin
               .map { case (df, i) => df.withColumn("__prio", lit(i)) }
               .reduce(_ unionByName _),
             Seq("codigo"), Seq(col("__prio").asc)).drop("__prio"))
-        publishCatalog("insumos", Schemas.ItemType.Insumo, insumoRows, details,
+        val publishes = Seq(
+          "insumos" -> (() => publishCatalog("insumos", Schemas.ItemType.Insumo, insumoRows, details,
             Seq("composicao_insumos" -> "insumo_filho_codigo"),
-            cfg("PLACEHOLDER_INSUMO_DESC"), log)
-          .foreach(inserted("insumos") = _)
-        publishCatalog("composicoes", Schemas.ItemType.Composicao, analitico.map(_._1), details,
+            cfg("PLACEHOLDER_INSUMO_DESC"), log)),
+          "composicoes" -> (() => publishCatalog("composicoes", Schemas.ItemType.Composicao,
+            analitico.map(_._1), details,
             Seq("composicao_subcomposicoes" -> "composicao_filho_codigo",
               "composicao_insumos" -> "composicao_pai_codigo",
               "composicao_subcomposicoes" -> "composicao_pai_codigo"),
-            cfg("PLACEHOLDER_COMPOSICAO_DESC"), log)
-          .foreach(inserted("composicoes") = _)
+            cfg("PLACEHOLDER_COMPOSICAO_DESC"), log)))
+        sideBySide(runId, publishes.map(Seq(_)))
+          .foreach { case (t, outcome) => outcome.get.foreach(inserted(t) = _) }
       }
     }
 
@@ -266,13 +304,35 @@ class PipelineETL(spark: SparkSession, store: graft.store.TableStore, cfg: Engin
         d.filter(col("tipo") === tipo).select("codigo", "descricao", "unidade"),
         placeholderDesc, cfg("PLACEHOLDER_UNIT")))
     }
-    // cached: the count and the write share one evaluation
     val state = Lifecycle.syncStatus(placeholders.fold(merged)(merged.unionByName),
-      log, tipo, cfg("DEACTIVATION_KEYWORD")).cache()
-    try {
-      val added = state.filter(col("__new")).count()
-      store.overwrite(table, state.drop("__new"))
-      Option.when(fresh.nonEmpty || added > 0)(added)
-    } finally state.unpersist()
+      log, tipo, cfg("DEACTIVATION_KEYWORD"))
+    val added = TableStore.observedCount(state, count_if(col("__new")))(s =>
+      store.overwrite(table, s.drop("__new")))
+    Option.when(fresh.nonEmpty || added > 0)(added)
+  }
+
+  /** Runs each lane's writes in order on a driver thread of its own, the
+    * lanes side by side, and returns every write's outcome in lane order
+    * once all of them have finished. Spark schedules the jobs of the
+    * concurrent actions together, so independent writes share the cores
+    * instead of queueing. The pool is as wide as the number of lanes. */
+  private def sideBySide[A](runId: String, lanes: Seq[Seq[(String, () => A)]]): Seq[(String, Try[A])] = {
+    val busy = lanes.filter(_.nonEmpty)
+    if (busy.isEmpty) Nil
+    else {
+      val pool = Executors.newFixedThreadPool(busy.size)
+      try {
+        val running = busy.map { lane =>
+          pool.submit(new Callable[Seq[(String, Try[A])]] {
+            def call(): Seq[(String, Try[A])] = {
+              ThreadContext.put("graftRunId", runId)
+              try lane.map { case (name, write) => name -> Try(write()) }
+              finally ThreadContext.remove("graftRunId")
+            }
+          })
+        }
+        running.flatMap(_.get())
+      } finally pool.shutdown()
+    }
   }
 }

@@ -1,7 +1,7 @@
 package graft.store
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -29,15 +29,6 @@ import graft.ops.Relational
 class TableStore(val spark: SparkSession, val root: String) {
 
   private def fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Row target per output file for the count-known append path
-    * (guide §6: aim for fat files, never shuffle-width dust). Conf-tunable
-    * (`graft.store.targetRowsPerFile`) for clusters where row width
-    * differs wildly; the default keeps append files in the
-    * tens-of-MB-to-GB band for typical widths. */
-  private def targetRowsPerFile: Long =
-    spark.conf.getOption("graft.store.targetRowsPerFile")
-      .flatMap(_.toLongOption).filter(_ > 0).getOrElse(4L * 1000 * 1000)
 
   def tablePath(table: String): String = s"$root/$table"
 
@@ -70,11 +61,20 @@ class TableStore(val spark: SparkSession, val root: String) {
     * table the anti-join's existing side is pruned to the incoming
     * batch's partitions (a monthly batch scans one month of history,
     * not all of it — the difference between O(batch) and O(table) at
-    * 100 TB). */
+    * 100 TB).
+    *
+    * The batch is evaluated once. Where the bounded period collect runs
+    * (an existing partitioned table) the batch is cached, the collect
+    * materializes it and the write reads it back. The write is the only
+    * other action, and the returned count is observed on it
+    * ([[TableStore.observedCount]]). Its files are sized like
+    * [[publish]]'s and written to `.staging` first; only a non-empty
+    * batch moves them into the table, so a no-op re-run adds no file. */
   def appendIgnore(table: String, df: DataFrame,
                    tiebreak: Seq[org.apache.spark.sql.Column] = Nil): Long = {
     val pk = Schemas.primaryKeys(table)
-    val parts = Schemas.partitionedBy.getOrElse(table, Nil)
+    val existed = exists(table)
+    val periodCol = Schemas.partitionedBy.getOrElse(table, Nil).headOption.filter(_ => existed)
     // In-batch survivor choice: with a `tiebreak` ordering the surviving
     // row per PK group is the FIRST under that order — pass the staged
     // `__line` column to reproduce the reference's ON CONFLICT DO
@@ -88,47 +88,39 @@ class TableStore(val spark: SparkSession, val root: String) {
     // would also never match the anti-join and so would re-append on
     // every run — drop such rows, mirroring the reference's explicit
     // key-null drops (SURVEY §1.2).
-    val incoming = align(table, deduped).na.drop(pk).dropDuplicates(pk)
-    val fresh =
-      if (!exists(table)) incoming
-      else {
-        val existing = parts.headOption match {
-          case Some(pcol) =>
-            // bounded driver-side collect: distinct months in the batch.
-            // Guarded — a mis-partitioned frame (e.g. a timestamp
-            // mistakenly used as the period) would otherwise collect
-            // millions of values onto the driver.
-            val periods = incoming.select(col(pcol)).distinct()
-              .limit(TableStore.MaxCollectedPeriods + 1).collect().map(_.get(0))
-            if (periods.length > TableStore.MaxCollectedPeriods)
-              throw new IllegalStateException(
-                s"appendIgnore($table): more than ${TableStore.MaxCollectedPeriods} " +
-                s"distinct values of partition column '$pcol' in one batch - " +
-                "not a period column? Refusing the driver-side collect.")
-            read(table).filter(col(pcol).isin(periods.toIndexedSeq: _*))
-          case None => read(table)
+    val batch = align(table, deduped).na.drop(pk).dropDuplicates(pk)
+    val incoming = if (periodCol.nonEmpty) batch.cache() else batch
+    try {
+      val fresh =
+        if (!existed) incoming
+        else {
+          val existing = periodCol match {
+            case Some(pcol) =>
+              // bounded driver-side collect: distinct months in the batch.
+              // Guarded — a mis-partitioned frame (e.g. a timestamp
+              // mistakenly used as the period) would otherwise collect
+              // millions of values onto the driver.
+              val periods = incoming.select(col(pcol)).distinct()
+                .limit(TableStore.MaxCollectedPeriods + 1).collect().map(_.get(0))
+              if (periods.length > TableStore.MaxCollectedPeriods)
+                throw new IllegalStateException(
+                  s"appendIgnore($table): more than ${TableStore.MaxCollectedPeriods} " +
+                  s"distinct values of partition column '$pcol' in one batch - " +
+                  "not a period column? Refusing the driver-side collect.")
+              read(table).filter(col(pcol).isin(periods.toIndexedSeq: _*))
+            case None => read(table)
+          }
+          incoming.join(existing.select(pk.map(col): _*), pk, "left_anti")
         }
-        incoming.join(existing.select(pk.map(col): _*), pk, "left_anti")
+      val staging = stagingDir(table)
+      val n = TableStore.observedCount(fresh)(stage(table, _, staging))
+      if (!existed) swapIn(table, staging)
+      else {
+        if (n > 0) moveDataFiles(staging, new Path(tablePath(table)))
+        fs.delete(staging, true)
       }
-    val n = fresh.cache().count()
-    if (n > 0) {
-      // Output-file sizing (optimization guide §6): the anti-join above
-      // leaves `fresh` with shuffle-width partitions (and a CACHED plan
-      // keeps them — AQE may not re-coalesce cached output partitioning),
-      // so a small batch would otherwise scatter into hundreds of
-      // near-empty files — paying per-file open cost on every later read
-      // and, on local filesystems without native IO, a forked `chmod`
-      // process per file at write time (measured: the q236 pipeline run
-      // spent most of its 100 s wall in Hadoop Shell.runCommand forks).
-      // n is already known exactly, so size the write to it; coalesce
-      // reads the cached blocks — no extra shuffle.
-      val k = math.max(1L, math.min(fresh.rdd.getNumPartitions.toLong,
-        (n + targetRowsPerFile - 1) / targetRowsPerFile)).toInt
-      val w = fresh.coalesce(k).write.mode("append")
-      (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(tablePath(table))
-    } else if (!exists(table)) publish(table, fresh)
-    fresh.unpersist()
-    n
+      n
+    } finally if (periodCol.nonEmpty) incoming.unpersist()
   }
 
   /** S10: incoming wins on PK clash; `tiebreak` orders non-PK-unique
@@ -188,7 +180,36 @@ class TableStore(val spark: SparkSession, val root: String) {
 
   /** Materialize-then-rename publish: write to `.staging`, swap in.
     * Registered partition layouts are applied here, so every full
-    * rewrite (overwrite/upsert/bootstrap) lands partitioned.
+    * rewrite (overwrite/upsert/bootstrap) lands partitioned. */
+  private def publish(table: String, df: DataFrame): Unit = {
+    val staging = stagingDir(table)
+    stage(table, df, staging)
+    swapIn(table, staging)
+  }
+
+  private def stagingDir(table: String): Path =
+    new Path(s"$root/.staging/${table}_${java.util.UUID.randomUUID()}")
+
+  /** Writes `df` to the `staging` directory in the table's partition
+    * layout.
+    *
+    * REBALANCE before the write (optimization guide §6): AQE sizes the
+    * write tasks to the advisory partition size, so a small table lands
+    * as one file instead of shuffle-width near-empty ones and a large
+    * partitioned table clusters by its partition column (few full files
+    * per partition directory, no small-files tax on later reads). Skew in
+    * a partition value is still split — REBALANCE, unlike repartition,
+    * lets AQE break oversized groups. */
+  private def stage(table: String, df: DataFrame, staging: Path): Unit = {
+    val parts = Schemas.partitionedBy.getOrElse(table, Nil)
+    val sized =
+      if (parts.nonEmpty) df.hint("rebalance", parts.map(col): _*)
+      else df.hint("rebalance")
+    val w = sized.write.mode("overwrite")
+    (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(staging.toString)
+  }
+
+  /** Renames a staged directory in as the whole table.
     *
     * Swap order is crash-safe-by-retention: the live table is renamed
     * ASIDE first, then staging renamed in, then the old copy deleted —
@@ -197,25 +218,10 @@ class TableStore(val spark: SparkSession, val root: String) {
     * table. True atomicity needs a metastore pointer swap or an ACID
     * table format (class doc); this is the strongest ordering plain
     * filesystem renames allow. */
-  private def publish(table: String, df: DataFrame): Unit = {
+  private def swapIn(table: String, staging: Path): Unit = {
     val target = new Path(tablePath(table))
-    val id = java.util.UUID.randomUUID()
-    val staging = new Path(s"$root/.staging/${table}_$id")
-    val parts = Schemas.partitionedBy.getOrElse(table, Nil)
-    // REBALANCE before the rewrite (optimization guide §6): AQE sizes the
-    // write tasks to the advisory partition size, so a small table lands
-    // as one file instead of shuffle-width near-empty ones and a large
-    // partitioned table clusters by its partition column (few full files
-    // per partition directory, no small-files tax on later reads). Skew in
-    // a partition value is still split — REBALANCE, unlike repartition,
-    // lets AQE break oversized groups.
-    val sized =
-      if (parts.nonEmpty) df.hint("rebalance", parts.map(col): _*)
-      else df.hint("rebalance")
-    val w = sized.write.mode("overwrite")
-    (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(staging.toString)
     fs.mkdirs(target.getParent)
-    val old = new Path(s"$root/.staging/${table}_old_$id")
+    val old = new Path(s"$root/.staging/${table}_old_${java.util.UUID.randomUUID()}")
     val hadOld = fs.exists(target)
     if (hadOld && !fs.rename(target, old))
       throw new IllegalStateException(s"publish failed for $table: rename $target -> $old")
@@ -224,6 +230,22 @@ class TableStore(val spark: SparkSession, val root: String) {
       throw new IllegalStateException(s"publish failed for $table: rename $staging -> $target")
     }
     if (hadOld) fs.delete(old, true)
+  }
+
+  /** Moves every data file under `from` to the same relative path under
+    * `to` (partition directories included); writer markers stay behind. */
+  private def moveDataFiles(from: Path, to: Path): Unit = {
+    val base = fs.makeQualified(from).toUri
+    val files = fs.listFiles(from, true)
+    while (files.hasNext) {
+      val f = files.next().getPath
+      if (!f.getName.startsWith("_") && !f.getName.startsWith(".")) {
+        val dest = new Path(to, base.relativize(f.toUri).getPath)
+        fs.mkdirs(dest.getParent)
+        if (!fs.rename(f, dest))
+          throw new IllegalStateException(s"append failed: rename $f -> $dest")
+      }
+    }
   }
 
   /** Catalog-registered bucketed copy of a DataFrame — the co-located
@@ -262,6 +284,16 @@ class TableStore(val spark: SparkSession, val root: String) {
 }
 
 object TableStore {
+  /** Runs `write`, which must execute `df` exactly once, over `df` with
+    * `metric` observed, and returns the metric's value: the count comes
+    * from the write itself, with no second pass over the data. A batch
+    * that AQE proves empty reports no metric; that reads as 0. */
+  def observedCount(df: DataFrame, metric: Column = count(lit(1)))(write: DataFrame => Unit): Long = {
+    val observation = Observation()
+    write(df.observe(observation, metric.as("n")))
+    observation.get.get("n").fold(0L)(_.asInstanceOf[Number].longValue)
+  }
+
   /** Cap on the distinct-period driver-side collect in [[TableStore!.appendIgnore]]:
     * far above any real months-per-batch count, low enough that a
     * mis-typed partition column fails fast instead of OOMing the driver. */

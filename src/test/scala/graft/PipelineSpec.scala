@@ -66,19 +66,32 @@ class PipelineSpec extends SparkSpec {
     dir.toString
   }
 
-  /** Counts the write calls (overwrite, upsert, append-ignore) per table. */
+  /** Counts the write calls (overwrite, upsert, append-ignore) per table;
+    * the pipeline makes them from several threads at once. */
   private class CountingStore(root: String) extends TableStore(spark, root) {
     val writes = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    private def counted(table: String): Unit = writes.synchronized { writes(table) += 1 }
     override def overwrite(table: String, df: DataFrame): Unit = {
-      writes(table) += 1; super.overwrite(table, df)
+      counted(table); super.overwrite(table, df)
     }
     override def upsert(table: String, df: DataFrame, tiebreak: Seq[Column]): Long = {
-      writes(table) += 1; super.upsert(table, df, tiebreak)
+      counted(table); super.upsert(table, df, tiebreak)
     }
     override def appendIgnore(table: String, df: DataFrame, tiebreak: Seq[Column]): Long = {
-      writes(table) += 1; super.appendIgnore(table, df, tiebreak)
+      counted(table); super.appendIgnore(table, df, tiebreak)
     }
   }
+
+  /** Fails every append-ignore into `failing` before it writes. */
+  private class FailingStore(root: String, failing: String) extends TableStore(spark, root) {
+    override def appendIgnore(table: String, df: DataFrame, tiebreak: Seq[Column]): Long =
+      if (table == failing) throw new IllegalStateException(s"injected failure writing $table")
+      else super.appendIgnore(table, df, tiebreak)
+  }
+
+  /** Every row of every registered table, in a stable order. */
+  private def tableRows(store: TableStore): Map[String, Seq[String]] =
+    graft.model.Schemas.all.keys.map(t => t -> store.read(t).collect().map(_.toString).toSeq.sorted).toMap
 
   private def runOnce(): (TableStore, graft.pipeline.RunReport) = {
     val store = new TableStore(spark, tmpDir("graft_wh"))
@@ -174,6 +187,23 @@ class PipelineSpec extends SparkSpec {
     assert(report.status == "SUCESSO", report)
     assert(store.writes("insumos") == 1, store.writes)
     assert(store.writes("composicoes") == 1, store.writes)
+  }
+
+  test("a failed load write fails the run, and a re-run converges on the golden end state") {
+    val root = tmpDir("graft_wh")
+    val staging = fixtures()
+    val e = intercept[IllegalStateException](
+      new PipelineETL(spark, new FailingStore(root, "custos_composicoes_mensal"),
+        EngineConfig.load(env = Map.empty)).run(staging, 2025, 1))
+    assert(e.getMessage == "injected failure writing custos_composicoes_mensal")
+    val store = new TableStore(spark, root)
+    // the phase's other writes finished before the failure surfaced
+    assert(store.read("precos_insumos_mensal").count() == 7)
+    val report = new PipelineETL(spark, store, EngineConfig.load(env = Map.empty))
+      .run(staging, 2025, 1)
+    assert(report.status == "SUCESSO", report)
+    val (golden, _) = runOnce()
+    assert(tableRows(store) == tableRows(golden))
   }
 
   test("maintenance-only month flips the deactivated code and nothing else") {

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.store.TableStore
@@ -40,6 +42,32 @@ class TableStoreSpec extends SparkSpec {
     val out = store.read("insumos").select("codigo", "descricao")
       .as[(Int, String)].collect().toMap
     assert(out == Map(1 -> "A", 2 -> "B", 3 -> "C"))
+  }
+
+  test("appendIgnore counts on the write; a no-op re-run adds no data file") {
+    val store = newStore()
+    def d(s: String) = java.sql.Date.valueOf(s)
+    def dataFiles(table: String): Int = {
+      val all = java.nio.file.Files.walk(java.nio.file.Paths.get(store.tablePath(table)))
+      try all.iterator().asScala.count(_.toString.endsWith(".parquet")) finally all.close()
+    }
+    val prices = Seq(
+      (1, "SP", d("2025-01-01"), "NAO_DESONERADO", BigDecimal(10)),
+      (1, "SP", d("2025-01-01"), "NAO_DESONERADO", BigDecimal(10)), // in-batch dup
+      (2, "RJ", d("2025-02-01"), "NAO_DESONERADO", BigDecimal(20)))
+      .toDF("insumo_codigo", "uf", "data_referencia", "regime", "preco_mediano")
+    val dims = Seq((1, "A", "UN", null: String, "ATIVO"), (2, "B", "UN", null: String, "ATIVO"))
+      .toDF("codigo", "descricao", "unidade", "classificacao", "status")
+    // one partitioned and one unpartitioned table
+    for ((table, batch) <- Seq("precos_insumos_mensal" -> prices, "insumos" -> dims)) {
+      assert(store.appendIgnore(table, batch) == 2, table)
+      val files = dataFiles(table)
+      assert(files > 0, table)
+      assert(store.appendIgnore(table, batch) == 0, table)
+      assert(store.appendIgnore(table, batch.limit(0)) == 0, table) // empty batch: no metric
+      assert(dataFiles(table) == files, table)
+      assert(store.read(table).count() == 2, table)
+    }
   }
 
   test("upsert: incoming wins on PK clash, others kept; idempotent") {
