@@ -16,13 +16,14 @@ import org.apache.spark.sql.SparkSession
   * any timed window — the synchronous spelling of what the cleaner
   * would eventually do.
   *
-  * Only run-scoped memos ([[ExtensionQueries.protectedRddIds]]) must
-  * survive: every other persisted RDD in this codebase is a per-query
-  * intermediate (audited r8: no operator shares persisted state across
-  * queries). The memo set is load-bearing, not an optimization — a
-  * localCheckpoint TRUNCATES lineage, so an unpersisted checkpoint
-  * cannot be recomputed; releasing a block a later query still reads
-  * would fail that query. That is also why this helper belongs in
+  * Only run-scoped memos ([[ExtensionQueries.protectedRddIds]]) and the
+  * edge closure [[graft.query.Queries]] holds must survive: every other
+  * persisted RDD in this codebase is a per-query intermediate (audited
+  * r8: no operator shares persisted state across queries). The memo
+  * set is load-bearing, not an optimization — a localCheckpoint
+  * TRUNCATES lineage, so an unpersisted checkpoint cannot be
+  * recomputed; releasing a block a later query still reads would fail
+  * that query. That is also why this helper belongs in
   * runners, between queries, never inside an operator.
   */
 object BlockRelease {
@@ -38,7 +39,7 @@ object BlockRelease {
   }
 
   /** The between-queries hygiene step: release everything but the
-    * run-scoped memo chain. */
+    * run-scoped memo chain and the edge closure. */
   def releaseTransient(spark: SparkSession): Int =
-    release(spark, ExtensionQueries.protectedRddIds)
+    release(spark, ExtensionQueries.protectedRddIds ++ graft.query.Queries.protectedRddIds)
 }

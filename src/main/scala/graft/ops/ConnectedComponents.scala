@@ -62,10 +62,7 @@ object ConnectedComponents {
   def labelsWithRounds(edges: DataFrame, maxIters: Int = 50,
                        localThreshold: Long = LocalEdgeThreshold): (DataFrame, Int) = {
     val spark = edges.sparkSession
-    val cpKey = "spark.sql.constraintPropagation.enabled"
-    val cpOld = spark.conf.getOption(cpKey)
-    spark.conf.set(cpKey, "false")
-    try {
+    ConstraintPropagation.off(spark) {
       val und = edges.select(col("a"), col("b"))
         .unionByName(edges.select(col("b").as("a"), col("a").as("b")))
         .distinct()
@@ -139,9 +136,6 @@ object ConnectedComponents {
             s"ConnectedComponents: no fixpoint after $maxIters rounds")
         (lbl, it)
       } finally und.unpersist()
-    } finally cpOld match {
-      case Some(v) => spark.conf.set(cpKey, v)
-      case None    => spark.conf.unset(cpKey)
     }
   }
 }

@@ -7,8 +7,12 @@ import org.apache.spark.sql.functions._
   * composition-tree use case, `/root/reference/docs/DataModel.md:386-391`:
   * a PostgreSQL recursive CTE over `vw_composicao_itens_unificados`).
   *
-  * Spark SQL has no recursive CTE, so this is an iterative BFS of
-  * self-joins (SURVEY.md §7.4). Two scale-minded choices:
+  * Spark 4 runs the documented `WITH RECURSIVE` shape too
+  * ([[graft.query.Views]]; `QueriesSpec` pins it against this operator),
+  * but a recursive CTE neither collapses converging paths per hop nor
+  * bounds lineage, and its step must re-cast the widening decimal
+  * product every iteration. This is an iterative BFS of self-joins
+  * instead (SURVEY.md §7.4), with two scale-minded choices:
   *  - **DAG collapse**: after each hop, paths converging on the same
   *    (root, node) are pre-aggregated (`sum` of path products — valid
   *    because multiplication distributes over addition). Path count never
@@ -46,17 +50,9 @@ object TreeExplode {
     // finally block — the result is localCheckpoint'ed first so it no
     // longer depends on the cached lineage.
     e.cache()
-    val spark = edges.sparkSession
-    // Unioning localCheckpoint'ed levels trips a Catalyst bug: UnionBase's
-    // constraint rewrite looks up the checkpoint's ORIGIN attributes in a
-    // map keyed by its NEW output attributes ("key not found: root#NN").
-    // Constraint propagation buys nothing for this iterative plan (every
-    // level is already a materialized RDD scan), so disable it around the
-    // loop and restore the caller's setting afterwards.
-    val cpKey = "spark.sql.constraintPropagation.enabled"
-    val cpOld = spark.conf.getOption(cpKey)
-    spark.conf.set(cpKey, "false")
-    try {
+    // The level union trips a Catalyst constraint-rewrite bug, so the
+    // loop runs with constraint propagation off (ConstraintPropagation).
+    try ConstraintPropagation.off(edges.sparkSession) {
       // ONE Spark job per BFS level: each frontier is a LAZY
       // localCheckpoint whose first action — the count() below — both
       // materializes the level (bounded lineage, computed exactly once)
@@ -106,12 +102,6 @@ object TreeExplode {
           s"TreeExplode: frontier still non-empty at depth $maxDepth - cycle or overly deep graph")
       (acc.groupBy("root", "node").agg(sum("eff_coeff").as("eff_coeff"))
         .localCheckpoint(), rounds)
-    } finally {
-      cpOld match {
-        case Some(v) => spark.conf.set(cpKey, v)
-        case None    => spark.conf.unset(cpKey)
-      }
-      e.unpersist()
-    }
+    } finally e.unpersist()
   }
 }

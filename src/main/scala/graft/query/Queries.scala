@@ -1,6 +1,9 @@
 package graft.query
 
-import org.apache.spark.sql.DataFrame
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.Schemas
@@ -12,6 +15,20 @@ import graft.store.TableStore
   * programs over the warehouse. Physical notes: catalogs are
   * dimension-sized → broadcast; facts are month/uf-keyed → lookups prune
   * to single partitions once the table is laid out by `data_referencia`.
+  *
+  * Tree and roll-up reads are answered from the '''closure''' of the
+  * current edge snapshot: `(root, node, eff_coeff)` for every root (every
+  * distinct `composicao_pai_codigo`), from one [[TreeExplode]] pass over
+  * the unified edges. The edges change once a month, so one build serves
+  * every tree query until then. The closure is built in this process on
+  * the first [[estrutura]] or [[custoRolledUp]] call for a snapshot — that
+  * call pays the build, a few seconds on a SINAPI-sized month — and is
+  * kept, localCheckpoint'ed in the block store, for later calls. A
+  * snapshot is the store root plus (path, length, mtime) of every data
+  * file of `composicao_insumos` and `composicao_subcomposicoes`; any
+  * rewrite of either table writes new part-file names, so it invalidates
+  * the closure, and the next call builds a new one. Only the latest
+  * closure is held.
   */
 object Queries {
 
@@ -31,17 +48,19 @@ object Queries {
 
   /** GET /composicao/{codigo}/estrutura — recursive explosion of the
     * composition tree over the unified edge view
-    * (`docs/DataModel.md:386-391`), via the iterative-BFS TreeExplode. */
-  def estrutura(store: TableStore, codigo: Int): DataFrame = {
-    val ins = store.read("composicao_insumos").select(
-      col("composicao_pai_codigo").as("parent"),
-      col("insumo_filho_codigo").as("child"), col("coeficiente").as("coeff"))
-    val subs = store.read("composicao_subcomposicoes").select(
-      col("composicao_pai_codigo").as("parent"),
-      col("composicao_filho_codigo").as("child"), col("coeficiente").as("coeff"))
-    val roots = ins.sparkSession.range(1).select(lit(codigo).as("root"))
-    TreeExplode.explode(ins.unionByName(subs), roots)
-  }
+    * (`docs/DataModel.md:386-391`): the closure's rows for `codigo`, with
+    * the same rows and schema the per-root BFS returns. When the
+    * all-roots build failed for this snapshot (a cycle or the depth
+    * bound anywhere in the graph), this root is exploded on its own, so
+    * a root that reaches no cycle still answers. */
+  def estrutura(store: TableStore, codigo: Int): DataFrame =
+    Closure(store) match {
+      case Some(closure) =>
+        closure.filter(col("root") === codigo)
+          .select(lit(codigo).as("root"), col("node"), col("eff_coeff"))
+      case None =>
+        TreeExplode.explode(edges(store), store.spark.range(1).select(lit(codigo).as("root")))
+    }
 
   /** Rolled-up composition cost: explode to leaves, join insumo prices,
     * sum effective-coefficient × price (SURVEY §2.4 note + §7.4). */
@@ -63,4 +82,91 @@ object Queries {
     store.read("manutencoes_historico")
       .filter(col("item_codigo") === codigo && col("tipo_item") === tipoItem)
       .orderBy(col("data_referencia").desc)
+
+  private val EdgeTables = Seq("composicao_insumos", "composicao_subcomposicoes")
+
+  /** The unified edge list (parent, child, coeff) of both edge tables. */
+  private def edges(store: TableStore): DataFrame = {
+    val ins = store.read("composicao_insumos").select(
+      col("composicao_pai_codigo").as("parent"),
+      col("insumo_filho_codigo").as("child"), col("coeficiente").as("coeff"))
+    val subs = store.read("composicao_subcomposicoes").select(
+      col("composicao_pai_codigo").as("parent"),
+      col("composicao_filho_codigo").as("child"), col("coeficiente").as("coeff"))
+    ins.unionByName(subs)
+  }
+
+  /** Block-store ids backing the held closure, which a between-queries
+    * release must keep: a localCheckpoint cannot be recomputed. */
+  private[graft] def protectedRddIds: Set[Int] =
+    Closure.resident.toSeq.flatMap(_.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }).toSet
+
+  /** The single-entry closure memo. */
+  private[graft] object Closure {
+
+    /** One edge snapshot: per edge table, its data files as
+      * (path, length, mtime), or None when the table is absent. */
+    private final case class Snapshot(spark: SparkSession, root: String,
+                                      files: Seq[Option[Seq[(String, Long, Long)]]])
+
+    /** The held snapshot and its closure; a None closure records that
+      * the all-roots build failed for that snapshot. */
+    @volatile private var held: Option[(Snapshot, Option[DataFrame])] = None
+
+    /** The closure of `store`'s current edge snapshot, built on first
+      * use, or None when it cannot be built for this snapshot.
+      *
+      * The edges are read before taking the lock, since a store
+      * subclass's `read` may call back into [[Queries]]; under the lock
+      * only the build (a [[TreeExplode]] pass) and a file listing run.
+      * The snapshot is listed again after the build, and the result
+      * is kept only if it did not change, so a closure never outlives
+      * the files it was built from. The replaced closure is dropped, not
+      * unpersisted: a DataFrame handed out earlier may still read it,
+      * and the ContextCleaner frees its blocks once nothing does. */
+    def apply(store: TableStore): Option[DataFrame] = {
+      val snap = snapshot(store)
+      def hit = held.collect { case (s, c) if s == snap => c }
+      hit.getOrElse {
+        val unified = edges(store)
+        synchronized {
+          hit.getOrElse {
+            val built =
+              try {
+                val roots = unified.select(col("parent").as("root"))
+                  .filter(col("root").isNotNull).distinct()
+                Some(TreeExplode.explode(unified, roots))
+              } catch { case NonFatal(_) => None }
+            if (snapshot(store) != snap) None
+            else {
+              held = Some(snap -> built)
+              built
+            }
+          }
+        }
+      }
+    }
+
+    private def snapshot(store: TableStore): Snapshot =
+      Snapshot(store.spark, store.root, EdgeTables.map { t =>
+        val dir = new Path(store.tablePath(t))
+        val fs = dir.getFileSystem(store.spark.sparkContext.hadoopConfiguration)
+        try {
+          val it = fs.listFiles(dir, true)
+          val files = Seq.newBuilder[(String, Long, Long)]
+          while (it.hasNext) {
+            val f = it.next()
+            val name = f.getPath.getName
+            if (!name.startsWith("_") && !name.startsWith("."))
+              files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+          }
+          Some(files.result().sorted)
+        } catch { case _: java.io.FileNotFoundException => None }
+      })
+
+    /** The held closure, if its build succeeded. */
+    def resident: Option[DataFrame] = held.flatMap(_._2)
+  }
 }

@@ -14,9 +14,12 @@ import graft.store.TableStore
   * executes recursive CTEs via `UnionLoopExec` (QueriesSpec pins it
   * against the programmatic [[graft.ops.TreeExplode]] path; as in PG,
   * the step's output types must match the anchor exactly, so widening
-  * decimal products need an explicit cast). For iterative workloads at
-  * scale prefer [[graft.query.Queries.estrutura]]: its per-level
-  * checkpointing bounds lineage and collapses converging paths each hop.
+  * decimal products need an explicit cast). For repeated tree reads
+  * prefer [[graft.query.Queries.estrutura]]: it answers every root from
+  * one closure of the edge snapshot, built on the first tree or roll-up
+  * call by a [[graft.ops.TreeExplode]] pass (per-level checkpointing,
+  * converging paths collapsed each hop) and rebuilt only after either
+  * edge table is rewritten; a CTE here re-walks the tree on every query.
   */
 object Views {
   def registerAll(store: TableStore): Unit = {

@@ -1,8 +1,12 @@
 package graft
 
+import java.util.concurrent.{Callable, Executors}
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.model.Schemas
+import graft.ops.TreeExplode
 import graft.query.Queries
 import graft.store.TableStore
 
@@ -11,6 +15,8 @@ import graft.store.TableStore
   * hand-built warehouse:
   *   composition 100 = 2.5 × insumo 1 + 1.0 × composition 200
   *   composition 200 = 3.0 × insumo 2
+  * The closure specs use a deeper DAG warehouse (`dag()`) and pin tree
+  * and roll-up reads against the per-root BFS they replaced.
   */
 class QueriesSpec extends SparkSpec {
   import spark.implicits._
@@ -122,6 +128,161 @@ class QueriesSpec extends SparkSpec {
       .select(col("node"), col("eff_coeff").cast("double"))
       .as[(Int, Double)].collect().toMap
     assert(out == prog)
+  }
+
+  /** A DAG warehouse for the closure specs:
+    *   300 -> 310 (2.0), 300 -> 320 (3.0)   diamond: 310 and 320
+    *   310 -> 330 (1.5), 320 -> 330 (0.5)   share subcomposition 330
+    *   330 -> 340 -> 350 -> 360             a chain: 300 reaches depth 6
+    *   350 -> 999                           999 is in no catalog
+    *   insumos: 300 -> 1, 320 -> 1, 330 -> 2, 360 -> 3, 360 -> 99
+    *            (99 is in no catalog and has no price)
+    *   370 is a catalogued composition with no edges. */
+  private def dag(): TableStore = {
+    val store = new TableStore(spark, tmpDir("graft_q_dag"))
+    store.overwrite("composicoes",
+      Seq(300, 310, 320, 330, 340, 350, 360, 370)
+        .map(c => (c, s"C$c", "UN", null: String, "ATIVO"))
+        .toDF("codigo", "descricao", "unidade", "grupo", "status"))
+    store.overwrite("composicao_insumos", insumoEdges(BigDecimal("2.0")))
+    store.overwrite("composicao_subcomposicoes", subEdges(BigDecimal("4.0")))
+    store.overwrite("precos_insumos_mensal",
+      Seq((1, BigDecimal("10.00")), (2, BigDecimal("4.00")), (3, BigDecimal("0.333333")))
+        .map { case (i, p) => (i, "SP", jan, "NAO_DESONERADO", p) }
+        .toDF("insumo_codigo", "uf", "data_referencia", "regime", "preco_mediano"))
+    store
+  }
+
+  private def insumoEdges(c330: BigDecimal): DataFrame =
+    Seq((300, 1, BigDecimal("1.0")), (320, 1, BigDecimal("0.25")), (330, 2, c330),
+      (360, 3, BigDecimal("0.1")), (360, 99, BigDecimal("7.0")))
+      .toDF("composicao_pai_codigo", "insumo_filho_codigo", "coeficiente")
+
+  private def subEdges(c350: BigDecimal): DataFrame =
+    Seq((300, 310, BigDecimal("2.0")), (300, 320, BigDecimal("3.0")),
+      (310, 330, BigDecimal("1.5")), (320, 330, BigDecimal("0.5")),
+      (330, 340, BigDecimal("2.0")), (340, 350, BigDecimal("1.25")),
+      (350, 360, c350), (350, 999, BigDecimal("1.0")))
+      .toDF("composicao_pai_codigo", "composicao_filho_codigo", "coeficiente")
+
+  /** Every parent, and a composition with no edges. */
+  private val dagRoots = Seq(300, 310, 320, 330, 340, 350, 360, 370)
+
+  /** The per-root BFS: what `estrutura` computed before the closure. */
+  private def bfs(store: TableStore, root: Int): DataFrame = {
+    val ins = store.read("composicao_insumos").select(
+      col("composicao_pai_codigo").as("parent"),
+      col("insumo_filho_codigo").as("child"), col("coeficiente").as("coeff"))
+    val subs = store.read("composicao_subcomposicoes").select(
+      col("composicao_pai_codigo").as("parent"),
+      col("composicao_filho_codigo").as("child"), col("coeficiente").as("coeff"))
+    TreeExplode.explode(ins.unionByName(subs), spark.range(1).select(lit(root).as("root")))
+  }
+
+  /** The roll-up over a given tree, as `custoRolledUp` spells it. */
+  private def rollup(store: TableStore, tree: DataFrame): DataFrame = {
+    val prices = store.read("precos_insumos_mensal")
+      .filter(col("uf") === "SP" && col("data_referencia") === jan &&
+        col("regime") === "NAO_DESONERADO")
+      .select(col("insumo_codigo"), col("preco_mediano"))
+    tree.join(prices, tree("node") === prices("insumo_codigo"))
+      .agg(sum((col("eff_coeff") * col("preco_mediano")).cast(Schemas.money))
+        .as("custo_total"))
+  }
+
+  /** Same schema and the same rows, decimals compared as BigDecimal. */
+  private def assertSame(got: DataFrame, want: DataFrame, what: String): Unit = {
+    assert(got.schema == want.schema, s"$what: schema")
+    val (g, w) = (got.collect().toSet, want.collect().toSet)
+    assert(g == w, s"$what: rows")
+  }
+
+  private def tree(store: TableStore, root: Int): Set[Row] =
+    Queries.estrutura(store, root).collect().toSet
+
+  test("closure: every root's tree and roll-up equal the per-root BFS, schema and decimals") {
+    val store = dag()
+    dagRoots.foreach { r =>
+      val want = bfs(store, r)
+      assertSame(Queries.estrutura(store, r), want, s"estrutura($r)")
+      assertSame(Queries.custoRolledUp(store, r, "SP", jan, "NAO_DESONERADO"),
+        rollup(store, want), s"custoRolledUp($r)")
+    }
+    assert(Queries.Closure.resident.isDefined, "the DAG's closure should be held")
+    // the shared subcomposition's paths sum: 330 is reached 2.0*1.5 + 3.0*0.5
+    val eff = Queries.estrutura(store, 300).collect()
+      .map(r => r.getInt(1) -> r.getDecimal(2)).toMap
+    assert(eff(330).compareTo(new java.math.BigDecimal("4.5")) == 0)
+    assert(eff(99).compareTo(new java.math.BigDecimal("315.0")) == 0)
+    assert(tree(store, 370).isEmpty && tree(store, 999).isEmpty && tree(store, 1).isEmpty)
+  }
+
+  test("closure: rewriting either edge table invalidates it") {
+    val store = dag()
+    assertSame(Queries.estrutura(store, 300), bfs(store, 300), "before")
+    val first = tree(store, 300)
+    store.overwrite("composicao_insumos", insumoEdges(BigDecimal("5.0")))
+    val afterIns = tree(store, 300)
+    assert(afterIns != first)
+    assert(afterIns == bfs(store, 300).collect().toSet)
+    store.overwrite("composicao_subcomposicoes", subEdges(BigDecimal("8.0")))
+    val afterSubs = tree(store, 300)
+    assert(afterSubs != afterIns)
+    val want = bfs(store, 300)
+    assert(afterSubs == want.collect().toSet)
+    assertSame(Queries.custoRolledUp(store, 300, "SP", jan, "NAO_DESONERADO"),
+      rollup(store, want), "roll-up after both rewrites")
+  }
+
+  test("closure: a cycle elsewhere leaves other roots answering, a root on it still raises") {
+    val store = warehouse()
+    store.overwrite("composicao_subcomposicoes",
+      Seq((100, 200, BigDecimal("1.0")), (500, 501, BigDecimal("1.0")), (501, 500, BigDecimal("1.0")))
+        .toDF("composicao_pai_codigo", "composicao_filho_codigo", "coeficiente"))
+    val out = Queries.estrutura(store, 100)
+      .select(col("node"), col("eff_coeff").cast("double"))
+      .as[(Int, Double)].collect().toMap
+    assert(out == Map(1 -> 2.5, 200 -> 1.0, 2 -> 3.0))
+    assert(Queries.Closure.resident.isEmpty, "the all-roots build must fail on the cycle")
+    intercept[IllegalStateException] { Queries.estrutura(store, 500).collect() }
+  }
+
+  test("closure: concurrent first calls all answer correctly") {
+    val store = dag()
+    val roots = Seq(300, 310, 330, 360)
+    val want = roots.map(r => r -> bfs(store, r).collect().toSet).toMap
+    val pool = Executors.newFixedThreadPool(roots.size)
+    try {
+      val futures = roots.map(r => pool.submit(new Callable[Set[Row]] {
+        def call(): Set[Row] = tree(store, r)
+      }))
+      roots.zip(futures).foreach { case (r, f) => assert(f.get() == want(r), s"root $r") }
+    } finally pool.shutdown()
+    assert(Queries.Closure.resident.isDefined)
+  }
+
+  test("closure: the memo holds one closure, and a replaced one is released") {
+    def firstRdd(df: DataFrame) = df.queryExecution.analyzed.collectFirst {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    }.get
+    val a = dag()
+    val want = tree(a, 300)
+    val heldA = new java.lang.ref.WeakReference(firstRdd(Queries.Closure.resident.get))
+    val idA = heldA.get.id
+    assert(Queries.protectedRddIds == Set(idA))
+    val b = dag()
+    assert(tree(b, 300) == want)
+    val idB = firstRdd(Queries.Closure.resident.get).id
+    assert(idB != idA && Queries.protectedRddIds == Set(idB))
+    // a between-queries block release keeps the held closure readable
+    BlockRelease.releaseTransient(spark)
+    assert(spark.sparkContext.getPersistentRDDs.contains(idB))
+    assert(tree(b, 300) == want)
+    assert(firstRdd(Queries.Closure.resident.get).id == idB, "B's closure was rebuilt")
+    // nothing but the memo referenced A's closure: once dropped, it is
+    // unreachable, so the ContextCleaner can free its blocks
+    (1 to 20).takeWhile { _ => System.gc(); Thread.sleep(50); heldA.get != null }
+    assert(heldA.get == null, "the replaced closure is still referenced")
   }
 
   test("item history: filtered scan, newest first") {

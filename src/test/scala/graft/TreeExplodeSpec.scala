@@ -47,6 +47,26 @@ class TreeExplodeSpec extends SparkSpec {
     }
   }
 
+  test("concurrent explodes restore the constraint-propagation conf, unset or set") {
+    val key = "spark.sql.constraintPropagation.enabled"
+    val edges = Seq((1L, 2L, 1L), (2L, 3L, 1L)).toDF("parent", "child", "coeff")
+    def explodeAtOnce(): Unit = {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+      try (1 to 4).map(_ => pool.submit(new java.util.concurrent.Callable[Long] {
+        def call(): Long = TreeExplode.explode(edges, Seq(1L).toDF("root")).count()
+      })).foreach(f => assert(f.get() == 2L))
+      finally pool.shutdown()
+    }
+    try {
+      spark.conf.unset(key)
+      explodeAtOnce()
+      assert(!spark.conf.getAll.contains(key), "an unset conf must stay unset")
+      spark.conf.set(key, "true")
+      explodeAtOnce()
+      assert(spark.conf.getAll.get(key).contains("true"))
+    } finally spark.conf.unset(key)
+  }
+
   test("restores the constraint-propagation conf after the loop") {
     val key = "spark.sql.constraintPropagation.enabled"
     spark.conf.set(key, "true")
