@@ -1,8 +1,6 @@
 package graft.query
 
-import scala.util.control.NonFatal
-
-import org.apache.hadoop.fs.Path
+import org.apache.logging.log4j.LogManager
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,11 +22,10 @@ import graft.store.TableStore
   * the first [[estrutura]] or [[custoRolledUp]] call for a snapshot — that
   * call pays the build, a few seconds on a SINAPI-sized month — and is
   * kept, localCheckpoint'ed in the block store, for later calls. A
-  * snapshot is the store root plus (path, length, mtime) of every data
-  * file of `composicao_insumos` and `composicao_subcomposicoes`; any
-  * rewrite of either table writes new part-file names, so it invalidates
-  * the closure, and the next call builds a new one. Only the latest
-  * closure is held.
+  * snapshot is the set of data files of `composicao_insumos` and
+  * `composicao_subcomposicoes`; any rewrite of either table writes new
+  * part-file names, so it invalidates the closure, and the next call
+  * builds a new one. Only the latest closure is held.
   */
 object Queries {
 
@@ -83,8 +80,6 @@ object Queries {
       .filter(col("item_codigo") === codigo && col("tipo_item") === tipoItem)
       .orderBy(col("data_referencia").desc)
 
-  private val EdgeTables = Seq("composicao_insumos", "composicao_subcomposicoes")
-
   /** The unified edge list (parent, child, coeff) of both edge tables. */
   private def edges(store: TableStore): DataFrame = {
     val ins = store.read("composicao_insumos").select(
@@ -106,31 +101,35 @@ object Queries {
   /** The single-entry closure memo. */
   private[graft] object Closure {
 
-    /** One edge snapshot: per edge table, its data files as
-      * (path, length, mtime), or None when the table is absent. */
-    private final case class Snapshot(spark: SparkSession, root: String,
-                                      files: Seq[Option[Seq[(String, Long, Long)]]])
+    /** One edge snapshot: the data files the edge DataFrame reads. */
+    private final case class Snapshot(spark: SparkSession, root: String, files: Seq[String])
 
     /** The held snapshot and its closure; a None closure records that
-      * the all-roots build failed for that snapshot. */
+      * the all-roots build hit a cycle or the depth bound. */
     @volatile private var held: Option[(Snapshot, Option[DataFrame])] = None
 
     /** The closure of `store`'s current edge snapshot, built on first
-      * use, or None when it cannot be built for this snapshot.
+      * use, or None when the graph has a cycle or is deeper than
+      * [[TreeExplode]]'s bound.
       *
-      * The edges are read before taking the lock, since a store
-      * subclass's `read` may call back into [[Queries]]; under the lock
-      * only the build (a [[TreeExplode]] pass) and a file listing run.
-      * The snapshot is listed again after the build, and the result
-      * is kept only if it did not change, so a closure never outlives
-      * the files it was built from. The replaced closure is dropped, not
-      * unpersisted: a DataFrame handed out earlier may still read it,
-      * and the ContextCleaner frees its blocks once nothing does. */
+      * The snapshot is the set of files the edge DataFrame reads, fixed
+      * when the DataFrame is created; every write of a table gives its
+      * part-files new names (a per-write UUID), so any rewrite of either
+      * edge table changes it, and the closure built from that DataFrame
+      * is by construction the closure of that snapshot. The edges are
+      * read before taking the lock, since a store subclass's `read` may
+      * call back into [[Queries]]; under the lock only the build (a
+      * [[TreeExplode]] pass) runs. Only a cycle or the depth bound
+      * (TreeExplode's IllegalStateException) is remembered; any other
+      * failure propagates and the next call builds again. The replaced
+      * closure is dropped, not unpersisted: a DataFrame handed out
+      * earlier may still read it, and the ContextCleaner frees its
+      * blocks once nothing does. */
     def apply(store: TableStore): Option[DataFrame] = {
-      val snap = snapshot(store)
+      val unified = edges(store)
+      val snap = Snapshot(store.spark, store.root, unified.inputFiles.sorted.toSeq)
       def hit = held.collect { case (s, c) if s == snap => c }
       hit.getOrElse {
-        val unified = edges(store)
         synchronized {
           hit.getOrElse {
             val built =
@@ -138,33 +137,18 @@ object Queries {
                 val roots = unified.select(col("parent").as("root"))
                   .filter(col("root").isNotNull).distinct()
                 Some(TreeExplode.explode(unified, roots))
-              } catch { case NonFatal(_) => None }
-            if (snapshot(store) != snap) None
-            else {
-              held = Some(snap -> built)
-              built
-            }
+              } catch {
+                case e: IllegalStateException =>
+                  LogManager.getLogger(getClass).warn(
+                    s"edge closure not built, exploding each root on its own: ${e.getMessage}")
+                  None
+              }
+            held = Some(snap -> built)
+            built
           }
         }
       }
     }
-
-    private def snapshot(store: TableStore): Snapshot =
-      Snapshot(store.spark, store.root, EdgeTables.map { t =>
-        val dir = new Path(store.tablePath(t))
-        val fs = dir.getFileSystem(store.spark.sparkContext.hadoopConfiguration)
-        try {
-          val it = fs.listFiles(dir, true)
-          val files = Seq.newBuilder[(String, Long, Long)]
-          while (it.hasNext) {
-            val f = it.next()
-            val name = f.getPath.getName
-            if (!name.startsWith("_") && !name.startsWith("."))
-              files += ((f.getPath.toString, f.getLen, f.getModificationTime))
-          }
-          Some(files.result().sorted)
-        } catch { case _: java.io.FileNotFoundException => None }
-      })
 
     /** The held closure, if its build succeeded. */
     def resident: Option[DataFrame] = held.flatMap(_._2)

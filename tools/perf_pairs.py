@@ -3,11 +3,12 @@
 
     python3 tools/perf_pairs.py --parent HEAD~1 --workload warehouse_reads --pairs 5
 
-Exports the parent revision with `git archive` into a fresh directory, so
-its build starts from a clean tree: no `target/`, `.bench_build/` or
-`.bench_work/` is shared with, or copied from, this checkout (a copied
-`target/` can have its classes deleted by the copy's own incremental
-build). Then it runs untraced `perfbench/run.py` on the parent and on this
+Exports the parent revision with `git archive` into a fresh temporary
+directory, removed at the end, so its build starts from a clean tree: no
+`target/`, `.bench_build/` or `.bench_work/` is shared with, or copied
+from, this checkout (a copied `target/` can have its classes deleted by
+the copy's own incremental build). Each run lasts BENCHMARK.json's
+`run_seconds`. Then it runs untraced `perfbench/run.py` on the parent and on this
 checkout's working tree, alternately, one seed per pair (`--seed0`,
 `--seed0 + 1`, ...), and swaps which side goes first every pair so host
 drift lands on both. Each side builds itself on its first run.
@@ -33,9 +34,6 @@ ROOT = Path(__file__).resolve().parent.parent
 
 def export(rev, dest):
     """Writes the tree of `rev` into the empty directory `dest`."""
-    dest.mkdir(parents=True, exist_ok=True)
-    if any(dest.iterdir()):
-        sys.exit(f"perf_pairs: {dest} is not empty")
     archive = subprocess.Popen(["git", "-C", str(ROOT), "archive", "--format=tar", rev],
                                stdout=subprocess.PIPE)
     subprocess.run(["tar", "-x", "-C", str(dest)], stdin=archive.stdout, check=True)
@@ -74,18 +72,13 @@ def main():
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", type=int, required=True)
     ap.add_argument("--seed0", type=int, default=101, help="seed of the first pair")
-    ap.add_argument("--seconds", type=float, default=None,
-                    help="measured seconds per run (default: BENCHMARK.json run_seconds)")
-    ap.add_argument("--dest", type=Path, default=None,
-                    help="empty directory for the parent tree (default: a new temporary one)")
-    ap.add_argument("--keep", action="store_true", help="keep the parent tree afterwards")
     ap.add_argument("--save", type=Path, default=None, help="directory to keep each run's ops.tsv in")
     a = ap.parse_args()
 
     spec = json.loads((ROOT / "BENCHMARK.json").read_text())
     metrics = spec["end_to_end"]
-    seconds = a.seconds if a.seconds is not None else spec["run_seconds"]
-    dest = a.dest or Path(tempfile.mkdtemp(prefix="perf_pairs_"))
+    seconds = spec["run_seconds"]
+    dest = Path(tempfile.mkdtemp(prefix="perf_pairs_"))
     export(a.parent, dest)
     sides = {"parent": dest, "change": ROOT}
     vals = {side: {m["name"]: [] for m in metrics} for side in sides}
@@ -113,8 +106,7 @@ def main():
                 wrong[s] += not res[s]["correct"]
             print(f"pair {i + 1} seed {seed} ({order[0]} first): " + "; ".join(cells), flush=True)
     finally:
-        if not a.keep:
-            shutil.rmtree(dest, ignore_errors=True)
+        shutil.rmtree(dest, ignore_errors=True)
 
     summary = {"workload": a.workload, "parent": a.parent, "pairs": len(vals["parent"][metrics[0]["name"]]),
                "incorrect_runs": wrong, "metrics": {}}
