@@ -24,16 +24,12 @@ object Bench {
     // whole bench into a head-of-empty-list crash.
     val repeats = math.max(1,
       sys.env.get("SPARK_GRAFT_BENCH_REPEATS").flatMap(_.toIntOption).getOrElse(1))
-    // Dev-only subset filter (comma-separated name prefixes), mirroring
-    // Verify's SPARK_GRAFT_VERIFY_ONLY: lets an in-bench-context effect
-    // (block-store pressure, GC/JIT contention) be reproduced on a
-    // slice without a 256-query pass. The driver never sets it, so its
-    // benches always time the full map.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").toSeq.filter(_.nonEmpty))
-    def wanted(name: String) = only.forall(_.exists(name.startsWith))
+    // Subset filter: lets an in-bench-context effect (block-store
+    // pressure, GC/JIT contention) be reproduced on a slice without a
+    // 256-query pass.
+    val wanted = registry.Registry.wanted("SPARK_GRAFT_BENCH_ONLY")
     val passes = (1 to repeats).map { _ =>
-      ExtensionQueries.clearMemos() // run-scoped memo: start fresh
+      registry.Memos.clearMemos() // run-scoped memo: start fresh
       // Sorted name order: SparkEntry.queries is a hash Map whose
       // iteration order reshuffles whenever a query is added, silently
       // changing which heavy query precedes which — q18's r4
@@ -66,7 +62,7 @@ object Bench {
         // OUTSIDE the timed window — so their pinned checkpoint blocks
         // stop taxing the remaining queries' memory headroom (the next
         // releaseTransient reclaims them).
-        ExtensionQueries.releaseMemosAfter(name)
+        registry.Memos.releaseMemosAfter(name)
         name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
       }
     }

@@ -16,7 +16,7 @@ import org.apache.spark.sql.SparkSession
   * any timed window — the synchronous spelling of what the cleaner
   * would eventually do.
   *
-  * Only run-scoped memos ([[ExtensionQueries.protectedRddIds]]) and the
+  * Only run-scoped memos ([[registry.Memos.protectedRddIds]]) and the
   * edge closure [[graft.query.Queries]] holds must survive: every other
   * persisted RDD in this codebase is a per-query intermediate (audited
   * r8: no operator shares persisted state across queries). The memo
@@ -41,5 +41,5 @@ object BlockRelease {
   /** The between-queries hygiene step: release everything but the
     * run-scoped memo chain and the edge closure. */
   def releaseTransient(spark: SparkSession): Int =
-    release(spark, ExtensionQueries.protectedRddIds ++ graft.query.Queries.protectedRddIds)
+    release(spark, registry.Memos.protectedRddIds ++ graft.query.Queries.protectedRddIds)
 }

@@ -81,23 +81,20 @@ object GoldenScale {
     if (!upToDate(outDir, copies))
       buildScaled(spark, "/root/testdata/sf0.1", outDir, copies)
 
-    // Dev-only subset filter (comma-separated name prefixes), the
-    // Verify convention: lets a long 10× sweep resume from where a
-    // previous invocation stopped instead of re-running the whole map.
-    val only = sys.env.get("SPARK_GRAFT_GOLDEN_ONLY")
-      .map(_.split(",").toSeq.filter(_.nonEmpty))
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.exists(n.startsWith)))
+    // Subset filter: lets a long 10× sweep resume from where a previous
+    // invocation stopped instead of re-running the whole map.
+    val wanted = registry.Registry.wanted("SPARK_GRAFT_GOLDEN_ONLY")
+    val names = SparkEntry.queries.keys.toSeq.sorted.filter(wanted)
     var failures = 0
     names.foreach { name =>
       spark.sparkContext.setJobDescription(s"golden:$name")
-      ExtensionQueries.clearMemos()
+      registry.Memos.clearMemos()
       val fn = SparkEntry.queries(name)
       // small-scale plan for the diff (cheap: sf0.1)
       val shapeSmall =
         try { val d = fn(spark, "/root/testdata/sf0.1"); d.count(); joinShape(d) }
         catch { case _: Throwable => Map.empty[String, Int] }
-      ExtensionQueries.clearMemos()
+      registry.Memos.clearMemos()
       System.gc()
       val t0 = System.nanoTime()
       val res =
@@ -130,7 +127,7 @@ object GoldenScale {
     // non-vacuous marker as TableStoreSpec ("Exchange hashpartitioning"
     // is how a shuffle prints; "ShuffleExchange" never appears).
     // runs in the full sweep, or selectably via GOLDEN_ONLY=bucketed
-    if (only.forall(_.exists(p => "bucketed".startsWith(p)))) {
+    if (wanted("bucketed")) {
       spark.sql("DROP TABLE IF EXISTS golden_bucket_a")
       spark.sql("DROP TABLE IF EXISTS golden_bucket_b")
       val li = spark.read.parquet(s"$outDir/lineitem.parquet")

@@ -98,7 +98,7 @@ object HeavyScale {
 
   private def run(spark: SparkSession, name: String,
                   dir: String): (Long, Double, Map[String, Int]) = {
-    ExtensionQueries.clearMemos()
+    registry.Memos.clearMemos()
     BlockRelease.releaseTransient(spark) // memos cleared → releases all
     System.gc()
     spark.sparkContext.setJobDescription(s"heavy:$name:$dir")
@@ -124,9 +124,7 @@ object HeavyScale {
     build(spark, "/root/testdata/sf0.1", smallDir, 10)
     build(spark, "/root/testdata/sf0.1", bigDir, bigCopies)
 
-    val only = sys.env.get("SPARK_GRAFT_HEAVY_ONLY")
-      .map(_.split(",").toSeq.filter(_.nonEmpty))
-    val names = HeavyQueries.filter(n => only.forall(_.exists(n.startsWith)))
+    val names = HeavyQueries.filter(registry.Registry.wanted("SPARK_GRAFT_HEAVY_ONLY"))
     var failures = 0
     names.foreach { name =>
       val res =

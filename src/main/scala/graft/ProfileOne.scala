@@ -56,7 +56,7 @@ object ProfileOne {
     spark.sparkContext.addSparkListener(listener)
     val fn = SparkEntry.queries(name)
     (1 to reps).foreach { i =>
-      ExtensionQueries.clearMemos()
+      registry.Memos.clearMemos()
       listener.synchronized(stages.clear())
       val t0 = System.nanoTime()
       val n = fn(spark, sfDir).count()

@@ -15,7 +15,7 @@ object RunOne {
     val spark = RunnerSession.create()
     val fn = SparkEntry.queries(name)
     (1 to reps).foreach { i =>
-      ExtensionQueries.clearMemos()
+      registry.Memos.clearMemos()
       val t0 = System.nanoTime()
       val n = fn(spark, sfDir).count()
       println(f"[runone] $name rep $i: ${(System.nanoTime() - t0) / 1e9}%.2f s, $n rows")

@@ -7,11 +7,7 @@ object Verify {
     val Array(sfDir, outDir) = args
     val spark = RunnerSession.create()
     new java.io.File(outDir).mkdirs()
-    // Dev-only subset filter (comma-separated name prefixes); the driver
-    // never sets it, so its runs always dump the full query map.
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").toSeq.filter(_.nonEmpty))
-    def wanted(name: String) = only.forall(_.exists(name.startsWith))
+    val wanted = registry.Registry.wanted("SPARK_GRAFT_VERIFY_ONLY")
     SparkEntry.queries.filter(kv => wanted(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

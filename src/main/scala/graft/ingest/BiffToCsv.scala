@@ -284,7 +284,7 @@ object BiffToCsv {
     if (d == math.rint(d) && math.abs(d) < 1e15) d.toLong.toString
     else d.toString
 
-  final class Workbook(val xls: Path) extends AutoCloseable {
+  final class Workbook(val xls: Path) extends graft.ingest.Workbook {
     private val cfb = new Cfb(Files.readAllBytes(xls))
     private val wb: Array[Byte] = cfb.stream("Workbook").getOrElse {
       if (cfb.stream("Book").isDefined)
@@ -425,12 +425,6 @@ object BiffToCsv {
 
     override def close(): Unit = ()
   }
-
-  def sheetNames(xls: Path): Seq[String] = new Workbook(xls).sheetNames
-
-  def convertSheet(xls: Path, sheetName: String, outCsv: Path,
-                   sep: Char = ';'): Long =
-    new Workbook(xls).convertSheet(sheetName, outCsv, sep)
 
   /** Probe that the CFB container opens and holds a BIFF8 Workbook
     * stream with at least one sheet — the acquisition-time guard that

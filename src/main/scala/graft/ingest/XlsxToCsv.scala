@@ -59,7 +59,7 @@ object XlsxToCsv {
     * the shared-string table parsed lazily AT MOST once — multi-sheet
     * conversion (the pipeline's normal case) must not re-read a ~10^5
     * entry sst per sheet. Close when done. */
-  final class Workbook(val xlsx: Path) extends AutoCloseable {
+  final class Workbook(val xlsx: Path) extends graft.ingest.Workbook {
     requireNotLegacyXls(xlsx)
     private val zf = new ZipFile(xlsx.toFile)
     /** (sheet name, worksheet zip entry) in workbook order. */
@@ -68,8 +68,6 @@ object XlsxToCsv {
 
     def sheetNames: Seq[String] = sheets.map(_._1)
 
-    /** Extract one sheet as a headerless, rectangular, `sep`-separated
-      * CSV (the pre_processor contract); returns lines written. */
     def convertSheet(sheetName: String, outCsv: Path, sep: Char = ';'): Long = {
       val entry = sheets.collectFirst { case (n, e) if n == sheetName => e }
         .getOrElse(throw new IllegalArgumentException(
@@ -81,22 +79,6 @@ object XlsxToCsv {
     override def close(): Unit = zf.close()
   }
 
-  def sheetNames(xlsx: Path): Seq[String] =
-    if (isLegacyXls(xlsx)) BiffToCsv.sheetNames(xlsx)
-    else {
-      val wb = new Workbook(xlsx)
-      try wb.sheetNames finally wb.close()
-    }
-
-  /** One-shot single-sheet conversion (opens and closes the workbook).
-    * Dispatches on the container: OOXML zip or legacy CFB/BIFF8. */
-  def convertSheet(xlsx: Path, sheetName: String, outCsv: Path, sep: Char = ';'): Long =
-    if (isLegacyXls(xlsx)) BiffToCsv.convertSheet(xlsx, sheetName, outCsv, sep)
-    else {
-      val wb = new Workbook(xlsx)
-      try wb.convertSheet(sheetName, outCsv, sep) finally wb.close()
-    }
-
   /** Convert every sheet whose name is in `sheets` (all sheets when
     * empty), writing `<outDir>/<ascii sheet name>.csv` — accent-stripped
     * so the pipeline's filename routing (`Analitico*`, S7/P9) matches
@@ -105,8 +87,8 @@ object XlsxToCsv {
   def convertAll(xlsx: Path, outDir: Path, sheets: Set[String] = Set.empty,
                  sep: Char = ';'): Seq[Path] = {
     Files.createDirectories(outDir)
-    if (isLegacyXls(xlsx)) {
-      val wb = new BiffToCsv.Workbook(xlsx)
+    val wb = graft.ingest.Workbook.open(xlsx)
+    try
       wb.sheetNames
         .filter(n => sheets.isEmpty || sheets.contains(n))
         .map { n =>
@@ -114,18 +96,7 @@ object XlsxToCsv {
           wb.convertSheet(n, out, sep)
           out
         }
-    } else {
-      val wb = new Workbook(xlsx)
-      try
-        wb.sheetNames
-          .filter(n => sheets.isEmpty || sheets.contains(n))
-          .map { n =>
-            val out = outDir.resolve(asciiName(n) + ".csv")
-            wb.convertSheet(n, out, sep)
-            out
-          }
-      finally wb.close()
-    }
+    finally wb.close()
   }
 
   /** CFB (Compound File Binary) magic — the container every legacy
@@ -144,15 +115,15 @@ object XlsxToCsv {
   }
 
   /** Guard for the OOXML-only [[Workbook]] class: a legacy binary
-    * workbook must never reach the zip layer (the public entry points
-    * dispatch to [[BiffToCsv]] instead, which parses BIFF8 for real —
+    * workbook must never reach the zip layer (`graft.ingest.Workbook.open`
+    * opens it with [[BiffToCsv]] instead, which parses BIFF8 for real —
     * this fires only on a direct `new Workbook` with the wrong file). */
   def requireNotLegacyXls(path: Path): Unit =
     if (isLegacyXls(path))
       throw new UnsupportedFormatException(
         s"legacy binary Excel workbook (BIFF/.xls, CFB magic) at $path: " +
-          "XlsxToCsv.Workbook parses OOXML (.xlsx) only — use the " +
-          "XlsxToCsv.convertAll/sheetNames entry points (they dispatch " +
+          "XlsxToCsv.Workbook parses OOXML (.xlsx) only — use " +
+          "Workbook.open or XlsxToCsv.convertAll (they dispatch " +
           "to the BIFF8 reader) or BiffToCsv directly")
 
   private def sheetEntries(zf: ZipFile): Seq[(String, String)] = {

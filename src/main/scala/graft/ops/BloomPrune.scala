@@ -77,16 +77,6 @@ object BloomPrune {
         bh === col("__kh"), "left_semi")
   }
 
-  /** Diagnostic: (total, bloom_survivors) row counts for `big` under the
-    * bitmap built from `keys` — the pruning ratio a PlanShapeSpec pins. */
-  def pruneDiag(big: DataFrame, keys: DataFrame,
-                bigKey: Column, keysKey: Column,
-                mBits: Int = 1 << 16, k: Int = 2): (Long, Long) = {
-    val bits = bloomBits(keys, keysKey, mBits, k)
-    val bh = TextFeatures.charHash(bigKey)
-    (big.count(), big.filter(mightContain(bh, bits, mBits, k)).count())
-  }
-
   /** X195: measured Bloom FPR — the calibration the theoretical
     * (1−e^(−kn/m))^k curve approximates and deployments should verify:
     * probe the bitmap with keys KNOWN absent (distinct probe hashes

@@ -901,13 +901,6 @@ object GraphRank {
       .select(col("src"), col("neg_dst"), col("rnk"))
   }
 
-  /** Co-citation similarity (Small JASIS 1973): how often two
-    * documents are cited TOGETHER — pairs of edge destinations sharing
-    * a source. `maxCiterFanout` caps a citing node's out-degree. */
-  def coCitation(edges: DataFrame, srcCol: String, dstCol: String,
-                 maxCiterFanout: Long = 1000, minCommon: Long = 2): DataFrame =
-    commonNeighborPairs(edges, srcCol, dstCol, maxCiterFanout, minCommon)
-
   /** Bibliographic coupling (Kessler AmDoc 1963): how many references
     * two documents SHARE — pairs of edge sources sharing a
     * destination. `maxCitedFanin` caps a cited node's in-degree. */

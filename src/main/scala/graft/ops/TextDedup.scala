@@ -253,20 +253,6 @@ object TextDedup {
       .drop("__rn")
   }
 
-  /** X201 for the substring tier: TTL compaction of the
-    * [[selfScrubIndex]] window index. Each (__h, __occ) row is already
-    * unique per distinct window, so there is no bucket to cap — the
-    * growth driver is window diversity, and the policy is retention:
-    * drop windows FIRST SEEN before the watermark occurrence key
-    * (`minOcc` = doc_id·2²² for a doc-id watermark — the arrival clock
-    * the occ encoding carries). Probing a compacted index cuts a
-    * SUBSET of what the full index would cut: an expired window that
-    * re-appears is treated as fresh and becomes the new first
-    * occurrence — the retention tradeoff, stated, not silent.
-    */
-  def compactScrubIndex(index: DataFrame, minOcc: Long): DataFrame =
-    index.filter(col("__occ") >= minOcc)
-
   /** Streaming-safe banded signatures: same math as [[corpusBandIndex]]
     * but with NO localCheckpoint/repartition (illegal on a streaming
     * frame). Single-consumer plans only — a batch caller with a

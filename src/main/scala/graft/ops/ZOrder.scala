@@ -51,19 +51,6 @@ object ZOrder {
             zCol: String = "z"): DataFrame =
     df.withColumn(zCol, zValue(dims.map(col), bitsPerDim))
 
-  /** The layout rewrite: range-partition on z into `numFiles` output
-    * partitions and sort within each — the write-side shape of an
-    * OPTIMIZE ZORDER job (each partition = one file whose footer
-    * min/max is tight on every dimension). One shuffle, total order
-    * across partitions. */
-  def zOrderLayout(df: DataFrame, dims: Seq[String], bitsPerDim: Int,
-                   numFiles: Int): DataFrame = {
-    require(numFiles >= 1, "layout needs at least one output file")
-    val z = withZ(df, dims, bitsPerDim, "__z")
-    z.repartitionByRange(numFiles, col("__z"))
-      .sortWithinPartitions(col("__z"))
-  }
-
   /** The measurable pruning claim: bucket rows by the TOP `log2Buckets`
     * bits of z (fixed-width, deterministic — no sampled range
     * boundaries) and report each bucket's min/max/count per dimension.

@@ -113,26 +113,14 @@ class PipelineETL(spark: SparkSession, store: TableStore, cfg: EngineConfig) {
           isolated(f.getName) {
             // one open workbook per file (shared-string table parsed
             // once), dispatched on the container magic
-            val (names, convert, close):
-                (Seq[String], (String, java.nio.file.Path) => Unit, () => Unit) =
-              if (graft.ingest.XlsxToCsv.isLegacyXls(f.toPath)) {
-                val wb = new graft.ingest.BiffToCsv.Workbook(f.toPath)
-                (wb.sheetNames,
-                  (s, p) => { wb.convertSheet(s, p, cfg("CSV_SEPARATOR").head); () },
-                  () => wb.close())
-              } else {
-                val wb = new graft.ingest.XlsxToCsv.Workbook(f.toPath)
-                (wb.sheetNames,
-                  (s, p) => { wb.convertSheet(s, p, cfg("CSV_SEPARATOR").head); () },
-                  () => wb.close())
-              }
-            try names.foreach { sheet =>
+            val wb = graft.ingest.Workbook.open(f.toPath)
+            try wb.sheetNames.foreach { sheet =>
               isolated(s"${f.getName}!$sheet") {
                 val out = new java.io.File(stagingDir,
                   graft.ingest.XlsxToCsv.asciiName(sheet) + ".csv")
-                if (!out.exists()) convert(sheet, out.toPath)
+                if (!out.exists()) wb.convertSheet(sheet, out.toPath, cfg("CSV_SEPARATOR").head)
               }
-            } finally close()
+            } finally wb.close()
           }
         }
     }

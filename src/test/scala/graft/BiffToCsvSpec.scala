@@ -7,7 +7,7 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ingest.{BiffToCsv, XlsxToCsv}
+import graft.ingest.{BiffToCsv, Workbook, XlsxToCsv}
 
 /** Hand-assembled CFB + BIFF8 fixtures (no Excel, no POI): every byte
   * below is written by the test itself, so the reader is pinned against
@@ -234,6 +234,16 @@ class BiffToCsvSpec extends AnyFunSuite {
     (cfbHeader(1, 1, 2, 1, 0) ++ fat ++ dir ++ miniFat ++ container).toArray
   }
 
+  private def sheetNamesOf(p: Path): Seq[String] = {
+    val wb = Workbook.open(p)
+    try wb.sheetNames finally wb.close()
+  }
+
+  private def convertSheet(p: Path, sheet: String, out: Path): Long = {
+    val wb = Workbook.open(p)
+    try wb.convertSheet(sheet, out) finally wb.close()
+  }
+
   private def tmp(prefix: String): Path =
     Files.createTempDirectory(prefix)
 
@@ -313,9 +323,9 @@ class BiffToCsvSpec extends AnyFunSuite {
     val dir = tmp("biff_reg")
     val xls = dir.resolve("SINAPI_REFERENCIA.xls")
     Files.write(xls, cfbRegular(workbookStream()))
-    assert(BiffToCsv.sheetNames(xls) == Seq("Planilha1", "Resumo"))
+    assert(sheetNamesOf(xls) == Seq("Planilha1", "Resumo"))
     val out = dir.resolve("s1.csv")
-    assert(BiffToCsv.convertSheet(xls, "Planilha1", out) == 5L)
+    assert(convertSheet(xls, "Planilha1", out) == 5L)
     val lines = Files.readString(out).split("\n").toSeq
     assert(lines == ExpectedSheet1)
   }
@@ -324,14 +334,14 @@ class BiffToCsvSpec extends AnyFunSuite {
     val dir = tmp("biff_mini")
     val xls = dir.resolve("small.xls")
     Files.write(xls, cfbMini(workbookStream()))
-    assert(BiffToCsv.sheetNames(xls) == Seq("Planilha1", "Resumo"))
+    assert(sheetNamesOf(xls) == Seq("Planilha1", "Resumo"))
     val out = dir.resolve("s2.csv")
-    assert(BiffToCsv.convertSheet(xls, "Resumo", out) == 1L)
+    assert(convertSheet(xls, "Resumo", out) == 1L)
     // the split SST string: compressed "abcd" + utf-16 "éfghij"
     assert(Files.readString(out).trim == "abcdéfghij")
     // sheet 1 parses identically through the mini path
     val out1 = dir.resolve("s1.csv")
-    BiffToCsv.convertSheet(xls, "Planilha1", out1)
+    convertSheet(xls, "Planilha1", out1)
     assert(Files.readString(out1).split("\n").toSeq == ExpectedSheet1)
   }
 
@@ -339,7 +349,8 @@ class BiffToCsvSpec extends AnyFunSuite {
     val dir = tmp("biff_dispatch")
     val xls = dir.resolve("wb.xls")
     Files.write(xls, cfbRegular(workbookStream()))
-    assert(XlsxToCsv.sheetNames(xls) == Seq("Planilha1", "Resumo"))
+    assert(Workbook.open(xls).isInstanceOf[BiffToCsv.Workbook])
+    assert(sheetNamesOf(xls) == Seq("Planilha1", "Resumo"))
     val outDir = dir.resolve("csv")
     val written = XlsxToCsv.convertAll(xls, outDir)
     assert(written.map(_.getFileName.toString).sorted ==
@@ -369,7 +380,7 @@ class BiffToCsvSpec extends AnyFunSuite {
     bytes(idx + 65) = 0
     Files.write(book, bytes)
     val e = intercept[graft.ingest.UnsupportedFormatException] {
-      BiffToCsv.sheetNames(book)
+      sheetNamesOf(book)
     }
     assert(e.getMessage.contains("BIFF5"))
   }

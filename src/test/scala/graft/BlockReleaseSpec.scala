@@ -1,5 +1,7 @@
 package graft
 
+import graft.registry.Memos
+
 /** Pins the between-queries block-release contract: transient
   * localCheckpoint blocks go away synchronously, memo-protected blocks
   * survive AND stay readable (a released localCheckpoint is
@@ -11,7 +13,7 @@ class BlockReleaseSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   test("releaseTransient drops a per-query checkpoint block synchronously") {
-    ExtensionQueries.clearMemos()
+    Memos.clearMemos()
     BlockRelease.releaseTransient(spark)
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val df = Seq(1, 2, 3).toDF("v").localCheckpoint()
@@ -24,10 +26,10 @@ class BlockReleaseSpec extends SparkSpec {
   }
 
   test("memo-protected checkpoints survive release and stay readable") {
-    ExtensionQueries.clearMemos()
+    Memos.clearMemos()
     BlockRelease.releaseTransient(spark)
-    val memoDf = ExtensionQueries.minhashPairsFor(spark, sf)
-    val protectedIds = ExtensionQueries.protectedRddIds
+    val memoDf = Memos.minhashPairs(spark, sf)
+    val protectedIds = Memos.protectedRddIds
     assert(protectedIds.nonEmpty, "memo creation should record its checkpoint RDD ids")
     // a transient checkpoint next to the memo
     val transient = Seq(4, 5).toDF("v").localCheckpoint()
@@ -38,8 +40,8 @@ class BlockReleaseSpec extends SparkSpec {
     // the memoized frame still computes from its (lineage-truncated) blocks
     assert(memoDf.count() > 0)
     // once memos are cleared, protection lapses and the blocks release
-    ExtensionQueries.clearMemos()
-    assert(ExtensionQueries.protectedRddIds.isEmpty)
+    Memos.clearMemos()
+    assert(Memos.protectedRddIds.isEmpty)
     BlockRelease.releaseTransient(spark)
     assert(spark.sparkContext.getPersistentRDDs.keySet
       .intersect(protectedIds).isEmpty)

@@ -19,12 +19,15 @@ class BloomPruneSpec extends SparkSpec {
   }
 
   test("bloom probe passes every present key (no false negatives) and prunes hard") {
-    val (total, survivors) = BloomPrune.pruneDiag(big, keys, col("k"), col("bk"))
-    assert(total == 2000L)
-    // every true match must survive the probe
-    assert(survivors >= 54L) // 2000/37 = 54 true matches
+    // every true match must survive the probe: 2000/37 = 54 true matches
+    assert(BloomPrune.prunedSemiJoin(big, keys, col("k"), col("bk")).count() == 54L)
+    // of the other 1946 keys the probe passes only the false positives;
     // with m=65536 bits, k=2, 54 keys: false-positive rate ~ (108/65536)^2
     // — essentially zero at this size; allow a loose factor anyway
+    val (absent, fps) = BloomPrune.fprReport(keys, big, col("bk"), col("k"))
+      .select("n_probes", "n_fp").as[(Long, Long)].collect().head
+    assert(absent == 1946L)
+    val survivors = 54L + fps
     assert(survivors <= 200L, s"bloom pruned too little: $survivors/2000 survive")
   }
 

@@ -407,11 +407,12 @@ class GraphRankSpec extends SparkSpec {
       }.groupBy(identity).view.mapValues(_.size.toLong).toMap
         .filter(_._2 >= minC)
     }
-    // co-citation: dst pairs per src (cap on src out-degree)
+    // co-citation: dst pairs per src (cap on src out-degree) — coupling
+    // on the reversed edges
     val bySrc = raw.distinct.groupBy(_._1).view
       .mapValues(_.map(_._2).toSet).toMap
-    val gotCC = GraphRank.coCitation(edges.repartition(5), "src", "dst",
-        maxCiterFanout = 12, minCommon = 2)
+    val gotCC = GraphRank.bibCoupling(edges.repartition(5), "dst", "src",
+        maxCitedFanin = 12, minCommon = 2)
       .as[(Long, Long, Long)].collect().map(r => (r._1, r._2) -> r._3).toMap
     assert(gotCC == model(bySrc, 12, 2))
     assert(gotCC.nonEmpty, "fixture must produce common-neighbor pairs")
@@ -423,7 +424,7 @@ class GraphRankSpec extends SparkSpec {
       .as[(Long, Long, Long)].collect().map(r => (r._1, r._2) -> r._3).toMap
     assert(gotBC == model(byDst, 8, 2))
     // the cap excludes hub keys entirely: with cap 1 nothing pairs
-    assert(GraphRank.coCitation(edges, "src", "dst", 1, 1).count() == 0)
+    assert(GraphRank.bibCoupling(edges, "src", "dst", 1, 1).count() == 0)
   }
 
   test("hyperBall: sketch after r rounds == HLL of the exact r-ball; growth is monotone") {

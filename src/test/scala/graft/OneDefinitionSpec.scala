@@ -7,9 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.GraftSparkExtensions
 
-/** The runner session and the SQL function table are each written once:
-  * sessions come from [[RunnerSession]] (or `pipeline.Main`'s own), and
-  * functions are registered only by [[GraftSparkExtensions]]. A copy
+/** The runner session, the SQL function table and each suite query are
+  * written once: sessions come from [[RunnerSession]] (or
+  * `pipeline.Main`'s own), functions are registered only by
+  * [[GraftSparkExtensions]], and a query is one `QuerySpec`. A copy
   * added anywhere else in `src/main/scala` fails here. */
 class OneDefinitionSpec extends AnyFunSuite {
   private lazy val sources: Map[String, String] = {
@@ -37,5 +38,12 @@ class OneDefinitionSpec extends AnyFunSuite {
         "call_function\\(\"(graft_[a-z0-9_]+)\"".r.findAllMatchIn(text).map(_.group(1))
     }.toSet
     assert(called.nonEmpty && called.subsetOf(table), s"not in the table: ${called -- table}")
+  }
+
+  test("no query is a name -> body or name -> SQL map entry") {
+    val entries = sources.toSeq.flatMap { case (f, text) =>
+      "\"q\\d+_\\w+\"\\s*->".r.findAllIn(text).map(m => s"$f: $m")
+    }
+    assert(entries.isEmpty, entries.mkString("\n"))
   }
 }

@@ -468,24 +468,6 @@ class TextDedupSpec extends SparkSpec {
     assert(pComp == Set((0L, 50L), (1L, 50L)) && pComp.subsetOf(pFull))
   }
 
-  test("compactScrubIndex: expired windows cut a subset; re-appearance is fresh") {
-    val s1 = TextDedup.selfScrubStep(
-      Seq((1L, "x y z w v")).toDF("doc_id", "text"),
-      TextDedup.emptyScrubIndex(spark), "doc_id", "text", 5)
-    val fullIdx = s1.index.localCheckpoint()
-    // watermark past doc 1's occ keys expires its windows
-    val compacted = TextDedup.compactScrubIndex(fullIdx, minOcc = 2L << 22)
-      .localCheckpoint()
-    assert(compacted.count() == 0 && fullIdx.count() == 1)
-    val clone = Seq((9L, "x y z w v")).toDF("doc_id", "text")
-    val cutFull = TextDedup.selfScrubStep(clone, fullIdx, "doc_id", "text", 5)
-      .scrubbed.as[(Long, Long, Long, Long)].collect().head
-    val cutComp = TextDedup.selfScrubStep(clone, compacted, "doc_id", "text", 5)
-      .scrubbed.as[(Long, Long, Long, Long)].collect().head
-    assert(cutFull._3 == 0L, "full index cuts the clone")
-    assert(cutComp._3 == 5L, "expired window re-appears as fresh — kept")
-  }
-
   test("selfScrub: negative doc id raises loudly") {
     val bad = Seq((-1L, "a b c d e f")).toDF("doc_id", "text")
     val e = intercept[Throwable] {

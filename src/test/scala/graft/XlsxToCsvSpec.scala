@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path, Paths}
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
 import graft.config.EngineConfig
-import graft.ingest.XlsxToCsv
+import graft.ingest.{Workbook, XlsxToCsv}
 import graft.pipeline.PipelineETL
 import graft.store.TableStore
 
@@ -122,6 +122,16 @@ class XlsxToCsvSpec extends SparkSpec {
     s"""<row r="5"><c r="E5" t="inlineStr"><is><t>wide "and" far</t></is></c></row>"""
   ).mkString
 
+  private def sheetNamesOf(p: Path): Seq[String] = {
+    val wb = Workbook.open(p)
+    try wb.sheetNames finally wb.close()
+  }
+
+  private def convertSheet(p: Path, sheet: String, out: Path): Long = {
+    val wb = Workbook.open(p)
+    try wb.convertSheet(sheet, out) finally wb.close()
+  }
+
   private def makeWorkbook(dir: Path, name: String = "SINAPI_REFERENCIA_2025_01.xlsx"): Path = {
     val p = dir.resolve(name)
     writeWorkbook(p,
@@ -132,7 +142,7 @@ class XlsxToCsvSpec extends SparkSpec {
   test("sheet discovery and accent-stripped output names") {
     val dir = Paths.get(tmpDir("xlsx_fix"))
     val wb = makeWorkbook(dir)
-    assert(XlsxToCsv.sheetNames(wb) == Seq("Analítico", "ISD", "Quirks"))
+    assert(sheetNamesOf(wb) == Seq("Analítico", "ISD", "Quirks"))
     assert(XlsxToCsv.asciiName("Analítico") == "Analitico")
     val outs = XlsxToCsv.convertAll(wb, dir.resolve("csv"))
     assert(outs.map(_.getFileName.toString) == Seq("Analitico.csv", "ISD.csv", "Quirks.csv"))
@@ -142,7 +152,7 @@ class XlsxToCsvSpec extends SparkSpec {
     val dir = Paths.get(tmpDir("xlsx_fix"))
     val wb = makeWorkbook(dir)
     val out = dir.resolve("Analitico.csv")
-    XlsxToCsv.convertSheet(wb, "Analítico", out)
+    convertSheet(wb, "Analítico", out)
     val lines = Files.readString(out, StandardCharsets.UTF_8).split("\n", -1).toSeq
     assert(lines(0) == "SINAPI - Composições Analítico;;;;;")
     (1 to 8).foreach(i => assert(lines(i) == ";;;;;", s"row ${i + 1} must be empty"))
@@ -157,7 +167,7 @@ class XlsxToCsvSpec extends SparkSpec {
     val dir = Paths.get(tmpDir("xlsx_fix"))
     val wb = makeWorkbook(dir)
     val out = dir.resolve("Quirks.csv")
-    XlsxToCsv.convertSheet(wb, "Quirks", out)
+    convertSheet(wb, "Quirks", out)
     val lines = Files.readString(out, StandardCharsets.UTF_8).split("\n", -1).toSeq
     assert(lines(0) == "=SUM(B1:C1);10;20;;")          // formula, not cached value
     assert(lines(1) == "\"cached;text\";True;False;;") // quoted separator + booleans
@@ -177,7 +187,7 @@ class XlsxToCsvSpec extends SparkSpec {
     Files.write(xls, bytes)
     // parse layer: named error, not a zip-layer failure
     val e1 = intercept[graft.ingest.UnsupportedFormatException] {
-      XlsxToCsv.sheetNames(xls)
+      sheetNamesOf(xls)
     }
     assert(e1.getMessage.contains("BIFF") && e1.getMessage.contains(".xlsx"))
     // acquisition layer: the whitelist accepts .xls (reference parity),
@@ -189,7 +199,7 @@ class XlsxToCsvSpec extends SparkSpec {
     // a real OOXML workbook still opens fine through the same guard
     val wbDir = Paths.get(tmpDir("xls_guard_ok"))
     val wb = makeWorkbook(wbDir)
-    assert(XlsxToCsv.sheetNames(wb).nonEmpty)
+    assert(sheetNamesOf(wb).nonEmpty)
   }
 
   test("end-to-end: a staging dir holding ONLY the workbook loads the warehouse") {

@@ -60,28 +60,6 @@ class ZOrderSpec extends SparkSpec {
     assert(naive.forall(_.getAs[Long]("sb") == 63L))
   }
 
-  test("zOrderLayout range-partitions on z with within-partition sort") {
-    val grid = (for (a <- 0L until 32L; b <- 0L until 32L) yield (a, b))
-      .toDF("a", "b")
-    val laid = ZOrder.zOrderLayout(grid, Seq("a", "b"), 5, numFiles = 8)
-    val plan = laid.queryExecution.executedPlan.toString
-    assert(plan.contains("rangepartitioning") || plan.contains("RangePartitioning"),
-      s"expected a range partition on __z, got:\n$plan")
-    // partitions tile z disjointly: every partition's z-range is
-    // disjoint from and ordered against its successors
-    val parts = laid.select(col("__z"))
-      .rdd.mapPartitionsWithIndex { (i, it) =>
-        val zs = it.map(_.getLong(0)).toArray
-        if (zs.isEmpty) Iterator.empty
-        else Iterator((i, zs.min, zs.max, zs.sameElements(zs.sorted)))
-      }.collect().sortBy(_._1)
-    assert(parts.forall(_._4), "each partition must be sorted by z")
-    parts.sliding(2).foreach {
-      case Array((_, _, max1, _), (_, min2, _, _)) => assert(max1 <= min2)
-      case _ => ()
-    }
-  }
-
   test("out-of-domain dimensions raise loudly instead of aliasing") {
     val e = intercept[Exception] {
       Seq((70L, 1L)).toDF("a", "b")
