@@ -29,10 +29,19 @@ object Registry {
     all
   }
 
-  /** Dev-only subset filter: the comma-separated name prefixes in the
-    * environment variable `envVar`; unset keeps every name. */
-  def wanted(envVar: String): String => Boolean = {
-    val only = sys.env.get(envVar).map(_.split(",").toSeq.filter(_.nonEmpty))
-    name => only.forall(_.exists(name.startsWith))
+  /** Dev-only subset filter: the comma-separated entries of the
+    * environment variable `envVar` ([[selects]]); unset keeps every name. */
+  def wanted(envVar: String): String => Boolean = selects(sys.env.get(envVar))
+
+  /** The names a comma-separated subset list keeps. An entry that is a
+    * bare query number (`q22`) keeps only that query (`q22_…`, not
+    * `q220_…`); any other entry is a name prefix (`q22_`, `bucketed`).
+    * None keeps every name. */
+  private[graft] def selects(only: Option[String]): String => Boolean = {
+    val entries = only.map(_.split(",").toSeq.filter(_.nonEmpty))
+    def keeps(entry: String, name: String): Boolean =
+      if (entry.matches("q\\d+")) name == entry || name.startsWith(entry + "_")
+      else name.startsWith(entry)
+    name => entries.forall(_.exists(keeps(_, name)))
   }
 }

@@ -1,7 +1,10 @@
 package graft
 
 import java.util.concurrent.{Callable, Executors}
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -16,7 +19,8 @@ import graft.store.TableStore
   *   composition 100 = 2.5 × insumo 1 + 1.0 × composition 200
   *   composition 200 = 3.0 × insumo 2
   * The closure specs use a deeper DAG warehouse (`dag()`) and pin tree
-  * and roll-up reads against the per-root BFS they replaced.
+  * and roll-up reads against the per-root BFS they replaced; the status
+  * specs pin lookups against the catalog left join they replaced.
   */
 class QueriesSpec extends SparkSpec {
   import spark.implicits._
@@ -308,5 +312,110 @@ class QueriesSpec extends SparkSpec {
       .select(col("data_referencia").cast("string"), col("tipo_manutencao"))
       .as[(String, String)].collect().toSeq
     assert(out == Seq(("2025-02-01", "DESATIVAÇÃO"), ("2025-01-01", "ALTERAÇÃO")))
+  }
+
+  test("item history: events appended month by month read newest first across partitions") {
+    val store = warehouse()
+    val months = Seq("2025-03-01", "2024-11-01", "2025-05-01", "2025-01-15", "2024-12-01")
+    months.foreach { m =>
+      store.appendIgnore("manutencoes_historico",
+        Seq((7, "INSUMO", d(m), s"M$m", "x"), (8, "INSUMO", d(m), "other item", "x"))
+          .toDF("item_codigo", "tipo_item", "data_referencia", "tipo_manutencao", "descricao_item"))
+    }
+    val scanned = store.read("manutencoes_historico")
+      .filter(col("item_codigo") === 7 && col("tipo_item") === "INSUMO")
+    assert(scanned.inputFiles.length >= months.size && scanned.rdd.getNumPartitions > 1,
+      "the item's events should span several files and scan partitions")
+    val out = Queries.historico(store, 7, Schemas.ItemType.Insumo)
+      .select(col("data_referencia").cast("string"), col("tipo_manutencao"))
+      .as[(String, String)].collect().toSeq
+    assert(out == months.sorted.reverse.map(m => (m, s"M$m")))
+  }
+
+  /** The warehouse with cost rows for 100 (ATIVO), 200 (DESATIVADO) and
+    * 777, a code missing from `composicoes`. */
+  private def priced(): TableStore = {
+    val store = warehouse()
+    store.overwrite("custos_composicoes_mensal",
+      Seq(100, 200, 777).map(c => (c, "SP", jan, "NAO_DESONERADO", BigDecimal(c) / 10))
+        .toDF("composicao_codigo", "uf", "data_referencia", "regime", "custo_total"))
+    store
+  }
+
+  private def catalog(rows: (Int, String)*): DataFrame =
+    rows.map { case (c, s) => (c, s"C$c", "M2", null: String, s) }
+      .toDF("codigo", "descricao", "unidade", "grupo", "status")
+
+  private def lookup(store: TableStore, codigo: Int): DataFrame =
+    Queries.custoComposicao(store, codigo, "SP", jan, "NAO_DESONERADO")
+
+  private def status(store: TableStore, codigo: Int): Seq[String] =
+    lookup(store, codigo).collect().map(_.getAs[String]("status")).toSeq
+
+  /** The left join on the catalog the status memo stands in for. */
+  private def statusJoin(store: TableStore, codigo: Int): DataFrame = {
+    val custos = Queries.custoComposicao(store, codigo, "SP", jan, "NAO_DESONERADO",
+      checkStatus = false)
+    custos.join(store.read("composicoes").select(col("codigo"), col("status")),
+      custos("composicao_codigo") === col("codigo"), "left").drop("codigo")
+  }
+
+  test("lookup status: rows, columns and nullable status equal the catalog left join") {
+    val store = priced()
+    Seq(100 -> "ATIVO", 200 -> "DESATIVADO", 777 -> (null: String)).foreach { case (c, want) =>
+      assertSame(lookup(store, c), statusJoin(store, c), s"lookup($c)")
+      assert(status(store, c) == Seq(want), s"status of $c")
+    }
+    assert(lookup(store, 100).schema("status").nullable)
+    assert(lookup(store, 555).collect().isEmpty)
+  }
+
+  test("lookup status: rewriting composicoes between lookups changes the next answer") {
+    val store = priced()
+    assert(status(store, 100) == Seq("ATIVO"))
+    store.upsert("composicoes", catalog(100 -> "DESATIVADO"))
+    assert(status(store, 100) == Seq("DESATIVADO"))
+    assert(status(store, 200) == Seq("DESATIVADO"))
+    store.overwrite("composicoes", catalog(200 -> "ATIVO", 777 -> "ATIVO"))
+    assert(status(store, 100) == Seq(null))
+    assert(status(store, 200) == Seq("ATIVO"))
+    assert(status(store, 777) == Seq("ATIVO"))
+  }
+
+  test("lookup status: concurrent first lookups all answer correctly") {
+    val store = priced()
+    val want = Seq(100 -> "ATIVO", 200 -> "DESATIVADO", 777 -> (null: String), 100 -> "ATIVO")
+    val pool = Executors.newFixedThreadPool(want.size)
+    try {
+      val futures = want.map { case (c, _) => pool.submit(new Callable[Seq[String]] {
+        def call(): Seq[String] = status(store, c)
+      }) }
+      want.zip(futures).foreach { case ((c, s), f) => assert(f.get() == Seq(s), s"code $c") }
+    } finally pool.shutdown()
+  }
+
+  test("point reads run one Spark job once the memos are warm, a roll-up at most two") {
+    val store = warehouse()
+    val sc = spark.sparkContext
+    def jobs(df: DataFrame): Int = {
+      val started = new AtomicInteger
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
+      }
+      ListenerBusDrain(sc)
+      sc.addSparkListener(listener)
+      try {
+        df.collect()
+        ListenerBusDrain(sc)
+        started.get
+      } finally sc.removeSparkListener(listener)
+    }
+    def lookupRead = lookup(store, 100)
+    def historyRead = Queries.historico(store, 1, Schemas.ItemType.Insumo)
+    def rollupRead = Queries.custoRolledUp(store, 100, "SP", jan, "NAO_DESONERADO")
+    Seq(lookupRead, historyRead, rollupRead).foreach(_.collect())
+    assert(jobs(lookupRead) == 1, "lookup")
+    assert(jobs(historyRead) == 1, "history")
+    assert(jobs(rollupRead) <= 2, "roll-up")
   }
 }

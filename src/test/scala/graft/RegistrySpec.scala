@@ -62,4 +62,15 @@ class RegistrySpec extends SparkSpec {
     Memos.releaseMemosAfter("q70_deduped_corpus")
     assert(Memos.memoNames(spark).isEmpty)
   }
+
+  test("a subset entry that is a bare query number keeps only that query") {
+    def kept(only: String) = Registry.specs.map(_.name).filter(Registry.selects(Some(only))).sorted
+    assert(kept("q22,q36,q70").map(_.takeWhile(_ != '_')) == Seq("q22", "q36", "q70"))
+    assert(kept("q22_") == kept("q22") && kept("q22").size == 1)
+    assert(kept("q22").size < Registry.specs.count(_.name.startsWith("q22")))
+    assert(kept("q23_dedup").size == 1)
+    assert(kept("nothing_matches").isEmpty)
+    assert(Registry.selects(None)("q220_anything"))
+    assert(Registry.selects(Some("bucketed"))("bucketed"))
+  }
 }

@@ -18,7 +18,9 @@ Prints one line per pair with every end-to-end metric of BENCHMARK.json
 change's median and quartiles and the number of pairs in which the change
 was better, and finally the same summary as one JSON line. With `--save`,
 each run's `.bench_work/<workload>/ops.tsv` (per-operation latencies, where
-the workload writes one) is kept as `<side>_seed<seed>_ops.tsv`.
+the workload writes one) is kept as `<side>_seed<seed>_ops.tsv`, and each
+side's per-kind median latency is printed from its saved op logs, pooled
+over its runs, without each run's first cycle of ten (the warm-up).
 """
 import argparse
 import json
@@ -45,6 +47,8 @@ def export(rev, dest):
 def run(checkout, workload, seed, seconds, save=None):
     """One untraced benchmark run; returns its result dict, or None.
     Copies the run's op log to `save` when both exist."""
+    if save is not None:
+        save.unlink(missing_ok=True)
     p = subprocess.run([sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
                         "--seconds", str(seconds), "--trace", "0"],
                        cwd=checkout, stdin=subprocess.DEVNULL, capture_output=True, text=True)
@@ -66,6 +70,34 @@ def quartiles(xs):
     return q[0], q[2]
 
 
+WARMUP_OPS = 10
+
+
+def kind_medians(paths):
+    """Median latency (ms) and op count per operation kind over the op logs
+    in `paths` (`kind<TAB>key<TAB>ms` lines), skipping each log's first
+    WARMUP_OPS lines."""
+    by_kind = {}
+    for path in paths:
+        for line in path.read_text().splitlines()[WARMUP_OPS:]:
+            kind, _, ms = line.split("\t")
+            by_kind.setdefault(kind, []).append(float(ms))
+    return {k: (statistics.median(v), len(v)) for k, v in by_kind.items()}
+
+
+def print_kind_medians(saved):
+    """One line per operation kind: each side's median latency and the ratio."""
+    meds = {side: kind_medians(paths) for side, paths in saved.items()}
+    order = ["lookup", "history", "tree", "rollup"]
+    kinds = order + sorted(set().union(*meds.values()) - set(order))
+    for k in kinds:
+        if k not in meds["parent"] or k not in meds["change"]:
+            continue
+        (p, pn), (c, cn) = meds["parent"][k], meds["change"][k]
+        print(f"{k} ms p50 after warm-up: parent {p:.4g} (n={pn}), change {c:.4g} (n={cn}), "
+              f"{c / p:.3f}x")
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--parent", required=True, help="git revision to compare against")
@@ -83,6 +115,7 @@ def main():
     sides = {"parent": dest, "change": ROOT}
     vals = {side: {m["name"]: [] for m in metrics} for side in sides}
     wrong = {side: 0 for side in sides}
+    saved = {side: [] for side in sides}
     if a.save:
         a.save.mkdir(parents=True, exist_ok=True)
     try:
@@ -92,6 +125,11 @@ def main():
             res = {side: run(sides[side], a.workload, seed, seconds,
                              a.save / f"{side}_seed{seed}_ops.tsv" if a.save else None)
                    for side in order}
+            if a.save:
+                for side in order:
+                    log = a.save / f"{side}_seed{seed}_ops.tsv"
+                    if res[side] is not None and log.is_file():
+                        saved[side].append(log)
             if any(r is None for r in res.values()):
                 print(f"pair {i + 1} seed {seed}: dropped, a run failed")
                 continue
@@ -124,6 +162,8 @@ def main():
         print(f"{n} [{m['unit']}, {m['better']} is better]: parent median {pm:.4g} "
               f"(q1-q3 {pq[0]:.4g}-{pq[1]:.4g}), change median {cm:.4g} "
               f"(q1-q3 {cq[0]:.4g}-{cq[1]:.4g}), change better in {better}/{len(p)} pairs")
+    if a.save:
+        print_kind_medians(saved)
     print(json.dumps(summary))
 
 
